@@ -167,9 +167,17 @@ object Dedup {
     *        0.0 forces direct, anything > 1 forces collapse — exposed so
     *        tests can prove both paths produce the same pairs. */
   def dedupNgramJaccard(docs: DataFrame, tau: Double = 0.8, n: Int = 3,
-                        collapseThreshold: Double = 0.95,
-                        shingles: Option[DataFrame] = None): DataFrame =
-    adaptiveShinglePairs(docs, n, collapseThreshold, "jaccard", shingles)(
+                        collapseThreshold: Double = 0.95): DataFrame =
+    adaptiveShinglePairs(docs, n, collapseThreshold, "jaccard")(
+      shW => jaccardPairs(shW, tau))
+
+  /** [[dedupNgramJaccard]] (n = 3, default collapse gate) over a
+    * caller-shared [[shingleHashes]] frame `sh` of the same docs — the
+    * [[dedupEvalQ]] sharing. Nothing checks that `sh` really is that
+    * frame, so this stays inside the package. */
+  private[graft] def dedupNgramJaccardOver(docs: DataFrame, sh: DataFrame,
+                                           tau: Double): DataFrame =
+    adaptiveShinglePairs(docs, 3, 0.95, "jaccard", Some(sh))(
       shW => jaccardPairs(shW, tau))
 
   /** Edit-distance verification of near-dup candidates: every jaccard
@@ -839,11 +847,15 @@ object Dedup {
     *        (LlmOpsSpec path-equality test). With the default 0.0 the
     *        gate aggregation is skipped entirely — zero overhead. */
   def dedupMinhash(docs: DataFrame, minEstSim: Double = 0.5,
-                   collapseThreshold: Double = 0.0,
-                   shingles: Option[DataFrame] = None): DataFrame = {
-    // caller-shared shingle frame (the adaptiveShinglePairs contract;
-    // must be the n=3 default build over the same docs)
-    def sh = shingles.getOrElse(shingleHashes(docs))
+                   collapseThreshold: Double = 0.0): DataFrame =
+    dedupMinhashOver(docs, shingleHashes(docs), minEstSim, collapseThreshold)
+
+  /** [[dedupMinhash]] over a [[shingleHashes]] frame `sh` of the same
+    * docs at the n = 3 default — caller-shared in [[dedupEvalQ]] (the
+    * adaptiveShinglePairs contract). Unvalidated, so package-private. */
+  private[graft] def dedupMinhashOver(docs: DataFrame, sh: DataFrame,
+                                      minEstSim: Double = 0.5,
+                                      collapseThreshold: Double = 0.0): DataFrame = {
     val direct = collapseThreshold <= 0.0 || {
       val gate = docs.agg(count(lit(1)).as("n"),
         approx_count_distinct(md5(col("text")), 0.02).as("nc")).head()
@@ -917,7 +929,7 @@ object Dedup {
     * `aggregate(zip_with(...))` evaluates interpreted (HOF lambda
     * dispatch per element; the measured VecDot rationale applies
     * verbatim). Callers must register the function on the session first
-    * ([[minhashPairs]]/[[dedupIncrementalMinhash]] do). */
+    * ([[minhashPairs]] does). */
   private def estSim =
     graft.functions.VectorFunctions.sigMatchCount(col("sa"), col("sb"))
       .cast("double") / NumHashes
@@ -932,7 +944,9 @@ object Dedup {
     * filtered inside the self-join) re-shuffles the 512-byte signature
     * 16× per doc on BOTH join sides, and the 10× smoke regressed 10.0 →
     * 13.5 s. Payload-on-band-rows pays only where the probe side is a
-    * pruned store read ([[dedupIncrementalMinhash]]'s cross arm). */
+    * pruned store read ([[probeMinhashBands]]' cross arm); folding the
+    * within-batch arm into that join measured slower at 20k docs too
+    * (see [[probeMinhashBands]]). */
   private[graft] def minhashPairs(sigs: DataFrame, minEstSim: Double): DataFrame = {
     graft.functions.VectorFunctions.register(sigs.sparkSession)
     val bands = bandRows(sigs).drop("sig")
@@ -1498,8 +1512,8 @@ object Dedup {
     // (their pair frames are checkpoint leaves), so the cache is dead —
     // and explicitly unpersisted — before the eval join ever runs.
     val sh = shingleHashes(docs).persist()
-    val cand = dedupMinhash(docs, shingles = Some(sh))
-    val truth = dedupNgramJaccard(docs, tau = 0.5, shingles = Some(sh))
+    val cand = dedupMinhashOver(docs, sh)
+    val truth = dedupNgramJaccardOver(docs, sh, tau = 0.5)
     sh.unpersist(blocking = false)
     dedupEval(cand, truth)
   }
@@ -1717,12 +1731,43 @@ object Dedup {
       spark, sink)
   }
 
+  /** Packed LSH band rows (doc_id, band, bh, sigb, part_bucket) of a
+    * document frame — the one signing step behind [[buildMinhashStore]],
+    * [[dedupIncrementalMinhash]] and the corpus-ingest loop, which signs
+    * a batch ONCE, probes with these rows and appends the survivors' rows
+    * to the store (`left_semi` on doc_id) instead of re-signing them.
+    * The vector functions are registered on `docs`' own session: a
+    * streaming micro-batch is analyzed by the stream's cloned session,
+    * whose registry a registration on the outer session never reaches. */
+  private[graft] def minhashBandRows(docs: DataFrame,
+                                     numBuckets: Int): DataFrame = {
+    graft.functions.VectorFunctions.register(docs.sparkSession)
+    bandRows(minhashSigs(shingleHashes(docs)))
+      .withColumn("sigb", graft.functions.VectorFunctions.packLongs(col("sig")))
+      .drop("sig")
+      .withColumn("part_bucket",
+        graft.sinks.WarehouseSink.bucketPartition(Seq("band", "bh"), numBuckets))
+  }
+
+  /** Write [[minhashBandRows]] output as the band store (truncate) or
+    * onto it (`append`). */
+  private[graft] def writeMinhashBands(rows: DataFrame,
+                                       sink: graft.sinks.WarehouseSink,
+                                       table: String,
+                                       append: Boolean): Unit =
+    sink.write(rows, table, "part_bucket", Seq("bh"),
+      writeDisposition =
+        if (append) graft.sinks.WriteDisposition.WriteAppend
+        else graft.sinks.WriteDisposition.WriteTruncate)
+
   /** Build (or, with `append = true`, extend) the MinHash band store: one
     * row per (doc_id, band, band_hash) with the full signature riding
     * along, bucket-partitioned by hash(band, bh). This is [[dedupMinhash]]
     * made INCREMENTAL — the near-dup analog of [[buildFingerprintStore]]:
     * a new batch probes the store by band hash and only reads the buckets
-    * its own bands land in, never re-shingling the corpus.
+    * its own bands land in, never re-shingling the corpus. The rows are
+    * [[minhashBandRows]]'s; a caller that already signed its docs for a
+    * probe appends those rows through [[writeMinhashBands]] instead.
     *
     * The signature is denormalized onto all 16 band rows (space-for-
     * locality): pair verification needs both signatures, and carrying
@@ -1739,18 +1784,8 @@ object Dedup {
   def buildMinhashStore(docs: DataFrame, sink: graft.sinks.WarehouseSink,
                         table: String = "minhash_bands",
                         numBuckets: Int = 32,
-                        append: Boolean = false): Unit = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
-    val rows = bandRows(minhashSigs(shingleHashes(docs)))
-      .withColumn("sigb", graft.functions.VectorFunctions.packLongs(col("sig")))
-      .drop("sig")
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("band", "bh"), numBuckets))
-    sink.write(rows, table, "part_bucket", Seq("bh"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
-  }
+                        append: Boolean = false): Unit =
+    writeMinhashBands(minhashBandRows(docs, numBuckets), sink, table, append)
 
   /** Near-dup pairs of a NEW batch: against the stored corpus (via the
     * band store, store-bucket-pruned) and within the batch itself —
@@ -1764,16 +1799,38 @@ object Dedup {
                               table: String = "minhash_bands",
                               minEstSim: Double = 0.5,
                               numBuckets: Int = 32): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    // the one persisted frame: packed band rows, referenced by the
-    // touched-bucket probe, the store cross-join and both within-batch
-    // self-join sides
-    val bands = bandRows(minhashSigs(shingleHashes(newDocs)))
-      .withColumn("sigb", graft.functions.VectorFunctions.packLongs(col("sig")))
-      .drop("sig")
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("band", "bh"), numBuckets))
-      .persist()
+    val bands = minhashBandRows(newDocs, numBuckets).persist()
+    val result = probeMinhashBands(bands, spark, sink, table, minEstSim)
+    bands.unpersist()
+    result
+  }
+
+  /** The probe behind [[dedupIncrementalMinhash]], over a batch's
+    * [[minhashBandRows]] (`bands`; the caller persists it — the
+    * touched-bucket probe, the store cross-join and both within-batch
+    * self-join sides read it).
+    *
+    * Two arms. Corpus×new collisions carry both packed signatures;
+    * est_sim is computed per collision row and filtered inside the join
+    * stage, so only verified pairs reach the final dedup (r6 — the r5
+    * form pushed ALL candidates through a groupBy first). The
+    * within-batch arm is SLIM ([[minhashPairs]]' r6 rationale):
+    * candidates from (band, bh, id) triples, verified against the packed
+    * signatures of the cached band-0 rows, one per doc. A single join of
+    * the batch rows against (pruned store ∪ batch rows) gives the same
+    * pair set (est_sim is symmetric) and saves a few stages on a small
+    * batch, but ships every batch signature through a second shuffle and
+    * verifies each within-batch collision twice: measured at the 10×
+    * tier (30k-doc store, 20k-doc batch, min of 5 interleaved, one JVM)
+    * it took 6.81 s against 6.17 s for this form. */
+  private[graft] def probeMinhashBands(bands: DataFrame, spark: SparkSession,
+                                       sink: graft.sinks.WarehouseSink,
+                                       table: String,
+                                       minEstSim: Double): DataFrame = {
+    // the cross arm is planned in the store's session, the within-batch
+    // arm in the batch's (a stream's clone of `spark`)
+    Seq(spark, bands.sparkSession).distinct
+      .foreach(graft.functions.VectorFunctions.register)
     val touched = bands.select("part_bucket").distinct().collect().map(_.getInt(0))
     // an absent store (first ingest of a fresh corpus) reads as empty
     val store =
@@ -1782,10 +1839,6 @@ object Dedup {
           lit(0L).as("bh"), lit(Array.emptyByteArray).as("sigb"))
       else sink.read(spark, table)
         .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
-    // corpus×new collisions carry both packed signatures; est_sim is
-    // computed per collision row and filtered inside the join stage, so
-    // only verified pairs reach the final dedup (r6 — the r5 form pushed
-    // ALL candidates through a groupBy first)
     val estBin = graft.functions.VectorFunctions
       .sigMatchCountBin(col("c.sigb"), col("n.sigb")).cast("double") / NumHashes
     val cross = store.as("c")
@@ -1796,10 +1849,6 @@ object Dedup {
         greatest(col("c.doc_id"), col("n.doc_id")).as("doc_b"),
         estBin.as("est_sim"))
       .filter(col("est_sim") >= minEstSim)
-    // within-batch arm, SLIM (the minhashPairs r6 rationale): candidates
-    // from (band, bh, id) triples, verified against the packed
-    // signatures carried by the cached band-0 rows — one per doc, read
-    // straight off the persisted bands frame
     val batchSigs = bands.filter(col("band") === 0)
       .select(col("doc_id"), col("sigb"))
     val slim = bands.select("doc_id", "band", "bh")
@@ -1818,10 +1867,8 @@ object Dedup {
       .filter(col("est_sim") >= minEstSim)
     // a batch doc already in the store (re-probe, or a batch overlapping
     // the corpus) would surface a pair via both arms — one row per pair
-    val result = graft.Exec.materialize(
+    graft.Exec.materialize(
       cross.unionByName(within).dropDuplicates("doc_a", "doc_b"))
-    bands.unpersist()
-    result
   }
 
   /** Driver query (rows-only; LlmOpsSpec proves it equals the full

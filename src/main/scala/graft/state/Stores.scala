@@ -22,6 +22,16 @@ private[state] object StoreFiles {
       finally s.close()
     }
   }
+
+  /** The directory exists and holds at least one entry. The listing is
+    * closed here: an unclosed `Files.list` keeps its descriptor open. */
+  def nonEmpty(path: String): Boolean = {
+    val p = Paths.get(path)
+    Files.exists(p) && {
+      val s = Files.list(p)
+      try s.findFirst().isPresent finally s.close()
+    }
+  }
 }
 
 /** Offset checkpoint store: a tiny parquet key/value table, the analog of
@@ -48,10 +58,7 @@ class OffsetStore(val path: String, spark: SparkSession,
 
   import spark.implicits._
 
-  private def exists: Boolean = {
-    val p = Paths.get(path)
-    Files.exists(p) && Files.list(p).findFirst().isPresent
-  }
+  private def exists: Boolean = StoreFiles.nonEmpty(path)
 
   /** Highest seq written, cached after the first disk read; -1 = empty. */
   private var cachedSeq: Long = Long.MinValue
@@ -196,10 +203,7 @@ class SchemaHistory(val path: String, spark: SparkSession,
   import spark.implicits._
 
   /** The storage location exists (reference `storageExists`). */
-  def storageExists: Boolean = {
-    val p = Paths.get(path)
-    Files.exists(p) && Files.list(p).findFirst().isPresent
-  }
+  def storageExists: Boolean = StoreFiles.nonEmpty(path)
 
   /** The history holds at least one record (reference `exists`). */
   def exists: Boolean = storageExists && !asDF.isEmpty

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.llm.Dedup
 import graft.sinks.WarehouseSink
@@ -20,9 +21,17 @@ import graft.state.OffsetStore
   *
   * Scale shape per batch: O(batch) hashing map-side, a store probe pruned
   * to the batch's fingerprint buckets, one partitioned append of accepted
-  * docs, one store append — nothing proportional to corpus size. State
-  * across restarts is carried by the checkpoint + the store layout, not
-  * executor memory (the [[CdcStream]] restart discipline). */
+  * docs, one store append — nothing proportional to corpus size. With
+  * near-dup rejection on, the exact survivors are signed ONCE (shingle →
+  * MinHash → band rows, persisted): those rows probe the band store and,
+  * cut to the final survivors by a `left_semi` on doc_id, are the
+  * band-store append. The stream loop reads each micro-batch from its
+  * file(s) once — its metrics count fills the cache the probes read.
+  * At a few hundred docs per batch the cost is per-job fixed cost, not
+  * data: one near-dup batch over existing stores runs ~46 Spark jobs
+  * (most of them AQE query stages; CorpusIngestSpec pins the budget).
+  * State across restarts is carried by the checkpoint + the store
+  * layout, not executor memory (the [[CdcStream]] restart discipline). */
 object CorpusIngest {
 
   /** Idempotent keyed upsert of documents: the corpus table is
@@ -95,7 +104,10 @@ object CorpusIngest {
                   embedTable: String = "embed_lsh",
                   embedCol: String = "embedding",
                   useBloom: Boolean = false): Long = {
-    val cached = batch.persist()
+    // a caller that already persisted the batch (the stream loop below)
+    // keeps ownership of its cache
+    val owned = batch.storageLevel == StorageLevel.NONE
+    val cached = if (owned) batch.persist() else batch
     // with `useBloom`, the exact probe goes through the versioned Bloom
     // sidecar (novel-content batches read zero store buckets); a stale
     // sidecar — e.g. a crash landed between the store append and the
@@ -109,12 +121,17 @@ object CorpusIngest {
       .filter(col("dup_of") === -1L)
       .select("doc_id")
     val exactSurvivors = cached.join(accepted, "doc_id").persist()
+    // the exact survivors are signed ONCE: the band rows feed the probe
+    // and, cut to the final survivors, the band-store append
+    val bands = nearDupMinEstSim.map(_ =>
+      Dedup.minhashBandRows(exactSurvivors, numBuckets).persist())
     // dedupIncremental's result is materialized (Exec.materialize), so
-    // the store appends below cannot observe this batch's own writes
+    // the store appends below cannot observe this batch's own writes;
+    // the minhash probe's pair frame is materialized the same way
     val nearPairSources = Seq(
       nearDupMinEstSim.map { tau =>
-        Dedup.dedupIncrementalMinhash(exactSurvivors, spark, sink,
-          mhTable, tau, numBuckets).select(col("doc_a"), col("doc_b"))
+        Dedup.probeMinhashBands(bands.get, spark, sink, mhTable, tau)
+          .select(col("doc_a"), col("doc_b"))
       },
       embedTau.map { tau =>
         graft.llm.Ann.dedupEmbedIncremental(
@@ -122,11 +139,13 @@ object CorpusIngest {
           spark, sink, embedTable, tau, numBuckets = numBuckets)
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
       }).flatten
-    val survivors = nearPairSources match {
-      case Nil => exactSurvivors
+    val (survivors, dirPairs) = nearPairSources match {
+      case Nil => (exactSurvivors, None)
       case srcs =>
         val pairs = srcs.reduce(_ unionByName _)
-        val batchIds = exactSurvivors.select(col("doc_id")).persist()
+        val batchIds = exactSurvivors.select(col("doc_id"))
+        // read by all three rejection branches below: cached, its joins
+        // run once inside the survivors' count (unpersisted after it)
         val dirPairs = pairs
           .select(col("doc_a").as("doc_id"), col("doc_b").as("partner"))
           .unionByName(pairs
@@ -149,18 +168,18 @@ object CorpusIngest {
             Seq("partner"), "left_anti")
           .select("doc_id").distinct()
         val rejected = corpusRejected.unionByName(batchRejected).distinct()
-        val s = exactSurvivors.join(rejected, Seq("doc_id"), "left_anti").persist()
-        s.count() // materialize before unpersisting parents
-        dirPairs.unpersist()
-        batchIds.unpersist()
-        s
+        (exactSurvivors.join(rejected, Seq("doc_id"), "left_anti").persist(),
+          Some(dirPairs))
     }
+    // the count fills the survivors' cache that every write below reads
     val n = survivors.count()
+    dirPairs.foreach(_.unpersist())
     if (n > 0) {
       upsertDocs(spark, sink, corpusTable, survivors, numBuckets)
-      nearDupMinEstSim.foreach { _ =>
-        Dedup.buildMinhashStore(survivors, sink, mhTable, numBuckets,
-          append = true)
+      bands.foreach { b =>
+        Dedup.writeMinhashBands(
+          b.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),
+          sink, mhTable, append = true)
       }
       embedTau.foreach { _ =>
         graft.llm.Ann.buildEmbedStore(
@@ -175,8 +194,9 @@ object CorpusIngest {
       if (useBloom) Dedup.buildFingerprintBloom(spark, sink, fpTable)
     }
     if (survivors ne exactSurvivors) survivors.unpersist()
+    bands.foreach(_.unpersist())
     exactSurvivors.unpersist()
-    cached.unpersist()
+    if (owned) cached.unpersist()
     n
   }
 
@@ -202,13 +222,16 @@ object CorpusIngest {
     src.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // metrics pay one extra count of the micro-batch file(s) — the
-        // same documented cost as CdcStream's metrics path
+        // the batch is read from its file(s) once: the metrics count
+        // fills the cache the ingest's probes then read
         val t0 = System.nanoTime()
-        val nIn = if (metricsTable.isDefined) batch.count() else 0L
-        val nAccepted = ingestBatch(spark, sink, batch, corpusTable, fpTable,
-          nearDupMinEstSim = nearDupMinEstSim,
-          embedTau = embedTau, embedCol = embedCol)
+        val cached = batch.persist()
+        val (nIn, nAccepted) =
+          try (if (metricsTable.isDefined) cached.count() else 0L,
+            ingestBatch(spark, sink, cached, corpusTable, fpTable,
+              nearDupMinEstSim = nearDupMinEstSim,
+              embedTau = embedTau, embedCol = embedCol))
+          finally cached.unpersist()
         offsets.put(Map(s"ingest/$corpusTable" -> batchId.toString))
         metricsTable.foreach { mt =>
           import spark.implicits._
