@@ -14,13 +14,19 @@ import graft.sinks.{CreateDisposition, WarehouseSink, WriteDisposition}
   * The snapshot table is partitioned by a stable key-hash bucket
   * (`part_bucket`), so per batch the cost is O(batch + touched buckets),
   * NOT O(history):
-  *  1. the batch's distinct buckets are computed (≤ numBuckets values,
-  *     tiny driver-side collect);
+  *  1. one shuffle-free job over the cached batch ([[summarize]]) yields
+  *     its row count and the set of buckets it touches (≤ numBuckets
+  *     values, a bit set per task);
   *  2. ONLY those snapshot buckets are read back — `part_bucket IN (...)`
   *     prunes directories at planning time, and because a key's bucket is
   *     stable no stale row can hide in an unread partition;
-  *  3. union + latest-wins dedup (one hash shuffle, map-side partial
-  *     aggregation) + hard-delete filter;
+  *  3. snapshot ∪ batch is shuffled ONCE, by `hashpartitioning(part_bucket,
+  *     n)`; the latest-wins dedup groups by (part_bucket, key), which that
+  *     partitioning already satisfies, so it adds no exchange, and neither
+  *     does the sink's own `repartition(n, part_bucket)` (Spark drops a
+  *     repartition its child's partitioning already meets); then the
+  *     hard-delete filter. The dedup's sort also serves as the cluster
+  *     sort, so each write task sorts once;
   *  4. dynamic partition overwrite rewrites ONLY the touched buckets.
   *
   * At 100 TB: a key-localized micro-batch touches few buckets and the
@@ -94,37 +100,109 @@ object MergePipeline {
                  keepDeletes: Boolean = false,
                  numBuckets: Int = DefaultNumBuckets,
                  ordering: Seq[Column] = defaultOrdering): Unit = {
-    val dropDeleted: DataFrame => DataFrame =
-      df => if (keepDeletes) df else df.filter(col("__op") =!= "d")
-    val bucket = WarehouseSink.bucketPartition(keyCols, numBuckets)
     val clusterCols = WarehouseSink.clusteringColumns(keyCols)
-    if (!sink.tableExists(table)) {
-      val snap = dropDeleted(Cdc.dedupLatest(batch, keyCols, ordering))
-        .withColumn("part_bucket", bucket)
-      sink.write(snap, table, "part_bucket", clusterCols)
-    } else {
-      // the batch is consumed twice (bucket discovery, then the merge
-      // union) — persist the micro-batch so the source computes once
+    if (!sink.tableExists(table))
+      mergeBuckets(spark, sink, table, batch, Set.empty, keyCols, clusterCols,
+        ordering, keepDeletes, numBuckets)
+    else {
+      // the batch is read twice (bucket discovery, then the MERGE) —
+      // persist it so the source computes once
       val cached = batch.persist()
-      // buckets this batch touches — bounded by numBuckets
-      val buckets = cached.select(bucket.as("b")).distinct()
-        .collect().map(_.getInt(0))
-      val existing = sink.read(spark, table)
-        .filter(col("part_bucket").isin(buckets.toIndexedSeq.map(b => lit(b)): _*))
-        .drop("part_bucket")
-      val merged = dropDeleted(Cdc.dedupLatest(
-        existing.unionByName(cached), keyCols, ordering))
-        .withColumn("part_bucket", bucket)
+      try {
+        val s = summarize(cached, keyCols, numBuckets)
+        if (s.rows > 0)
+          mergeBuckets(spark, sink, table, cached, s.buckets, keyCols,
+            clusterCols, ordering, keepDeletes, numBuckets)
+      } finally cached.unpersist()
+    }
+  }
+
+  /** What one pass over a micro-batch yields: its accepted rows, its
+    * rejected rows, and the buckets the accepted rows touch. */
+  private[graft] final case class BatchSummary(rows: Long, rejected: Long,
+                                               buckets: Set[Int])
+
+  /** ONE job, no shuffle, over `batch` (cache it first: this pass fills
+    * the cache the MERGE then reads): each task folds its rows into
+    * (accepted, rejected, bit set of buckets) and the driver ORs the
+    * bit sets. A row is rejected when `rejectedCol` is true; without
+    * one every row is accepted. */
+  private[graft] def summarize(batch: DataFrame, keyCols: Seq[String],
+                               numBuckets: Int,
+                               rejectedCol: Option[String] = None): BatchSummary = {
+    val bucket = WarehouseSink.bucketPartition(keyCols, numBuckets)
+    // buckets are ≥ 0 (pmod); -1 marks a rejected row
+    val tagged = rejectedCol.fold(bucket)(r => when(col(r), lit(-1)).otherwise(bucket))
+    val (rows, rejected, buckets) = batch.select(tagged).queryExecution.toRdd
+      .aggregate((0L, 0L, new scala.collection.mutable.BitSet(numBuckets)))(
+        { case ((n, r, bs), row) =>
+            val b = row.getInt(0)
+            if (b < 0) (n, r + 1, bs) else (n + 1, r, bs += b) },
+        { case ((n1, r1, b1), (n2, r2, b2)) => (n1 + n2, r1 + r2, b1 |= b2) })
+    BatchSummary(rows, rejected, buckets.toSet)
+  }
+
+  /** The bucket MERGE behind [[mergeBatch]], the CDC stream and the
+    * corpus upsert: `batch` (already cached by the caller, and the
+    * buckets it `touched` already known — see [[summarize]]) is merged
+    * into `table`, latest-wins per key by `ordering`. With
+    * `incomingWins`, any batch row beats any stored row of its key and
+    * `ordering` only picks among the batch's own rows. When the table
+    * does not exist yet, `touched` is unused and the batch alone is
+    * deduped and written.
+    *
+    * One shuffle: stored rows of the touched buckets ∪ batch rows are
+    * repartitioned by `part_bucket` into the session's
+    * `spark.sql.shuffle.partitions`, the dedup groups by (part_bucket,
+    * key) on that partitioning, and the sink's write repartition is
+    * elided. The output keeps the layout (keys, payload, `part_bucket`)
+    * and the cluster order, so the written files do not change. */
+  private[graft] def mergeBuckets(spark: SparkSession, sink: WarehouseSink,
+                                  table: String, batch: DataFrame,
+                                  touched: Set[Int], keyCols: Seq[String],
+                                  clusterCols: Seq[String],
+                                  ordering: Seq[Column], keepDeletes: Boolean,
+                                  numBuckets: Int,
+                                  incomingWins: Boolean = false): Unit = {
+    val exists = sink.tableExists(table)
+    val bucket = WarehouseSink.bucketPartition(keyCols, numBuckets)
+    val incoming = batch.withColumn("part_bucket", bucket)
+    val all =
+      if (!exists) incoming
+      else {
+        val existing = sink.read(spark, table)
+          .filter(col("part_bucket").isin(touched.toSeq.sorted.map(b => lit(b)): _*))
+        if (incomingWins)
+          existing.withColumn("__incoming", lit(false))
+            .unionByName(incoming.withColumn("__incoming", lit(true)))
+        else existing.unionByName(incoming)
+      }
+    val order = if (incomingWins && exists) col("__incoming") +: ordering else ordering
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val deduped = Cdc.dedupLatest(all.repartition(n, col("part_bucket")),
+      "part_bucket" +: keyCols, order)
+    val payload = deduped.columns.filterNot(c =>
+      c == "part_bucket" || c == "__incoming" || keyCols.contains(c)).toSeq
+    val merged = (if (keepDeletes) deduped else deduped.filter(col("__op") =!= "d"))
+      .select((keyCols ++ payload :+ "part_bucket").map(col): _*)
+    // a key is one row per bucket now, so cluster columns that only
+    // extend the full key order rows exactly as the key does: sorting on
+    // the key lets Spark reuse the dedup's sort (its output is ordered by
+    // (part_bucket, key)) instead of a second sort, and its memory page,
+    // in the same task
+    val sortCols = if (clusterCols.startsWith(keyCols)) keyCols else clusterCols
+    if (!exists) sink.write(merged, table, "part_bucket", sortCols)
+    else {
       // Dynamic overwrite only rewrites partitions PRESENT in the output.
       // A bucket whose every key ended deleted has no output rows, so its
       // stale files would survive — those partition dirs are dropped
       // explicitly below. The written-bucket set is observed INSIDE the
       // write job (CollectMetrics over ≤ numBuckets values): no second
       // pass over `merged`, and with its single consumer gone, no persist
-      // of it either — union+dedup+write is ONE job.
+      // of it either.
       val obs = org.apache.spark.sql.Observation(s"merge_$table")
       sink.write(merged.observe(obs, collect_set(col("part_bucket")).as("w")),
-        table, "part_bucket", clusterCols,
+        table, "part_bucket", sortCols,
         createDisposition = CreateDisposition.CreateNever,
         writeDisposition = WriteDisposition.WriteAppend,
         dynamicOverwrite = true)
@@ -132,14 +210,13 @@ object MergePipeline {
       // (CollectMetrics emits its row whenever any task runs, and
       // Observation.get returns only after the action's listener fired) —
       // so the fallback is the empty set. Do NOT re-execute `merged`
-      // here: its plan reads `existing` through a file index listed
+      // here: its plan reads the snapshot through a file index listed
       // BEFORE the dynamic overwrite replaced those files.
       val written = scala.util.Try(obs.get("w").asInstanceOf[Seq[Int]].toSet)
         .getOrElse(Set.empty[Int])
-      cached.unpersist()
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      (buckets.toSet -- written).foreach { b =>
+      (touched -- written).foreach { b =>
         fs.delete(new org.apache.hadoop.fs.Path(
           s"${sink.tablePath(table)}/part_bucket=$b"), true)
       }

@@ -3910,6 +3910,9 @@ object Ann {
     * quadratic term past the substrate build. */
   def knnKcore(embeddings: DataFrame, k: Int = 5, iters: Int = 10,
                graph: Option[DataFrame] = None): DataFrame = {
+    // with no round the tail would read the un-materialized degree init
+    // twice (broadcast total + rollup) and compute it twice
+    require(iters >= 1, s"knnKcore needs iters >= 1, got $iters")
     val g = graft.Exec.materialize(
       graph.getOrElse(knnGraph(embeddings, k))
         .select(col("vec_id"), col("nbr_id")))

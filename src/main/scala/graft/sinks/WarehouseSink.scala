@@ -47,7 +47,12 @@ object WriteDisposition extends Enumeration {
   * size into ONE partition, and then a single task writes every bucket
   * file one after another (a 168-row write into 32 buckets, local[4],
   * 8 interleaved runs: median ~475 ms that way, ~290 ms spread over the
-  * session's 4 shuffle partitions).
+  * session's 4 shuffle partitions). When the incoming frame is already
+  * `hashpartitioning(partitionCol, n)` with that same n, Spark elides
+  * this repartition (its child's partitioning already meets it), so the
+  * write adds no shuffle: the bucket MERGE
+  * ([[graft.cdc.MergePipeline.mergeBuckets]]) relies on this to run
+  * union, dedup and write on one shuffle.
   * Dynamic partition overwrite rewrites only the partitions present in
   * the incoming frame — the physical primitive incremental MERGE
   * needs. */

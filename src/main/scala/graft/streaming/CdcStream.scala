@@ -138,9 +138,13 @@ object CdcStream {
     * line + reason + batch id instead of reaching the MERGE; with
     * `metricsTable`, every batch appends one (batch_id, n_rows,
     * n_rejected, wait_ms, wall_ms) row — the per-upload stats the
-    * reference logs, queryable instead of greppable. Metrics force a
-    * per-batch count (documented cost; the rejected count rides the same
-    * cached pass). */
+    * reference logs, queryable instead of greppable.
+    *
+    * Each micro-batch is cached once and read by ONE shuffle-free job
+    * ([[MergePipeline.summarize]]) that yields its accepted and rejected
+    * counts and the buckets its accepted rows touch; metrics, the
+    * throttle and the MERGE's bucket pruning all read that summary, so
+    * none of them costs a pass of its own. */
   private def mergeLoop(spark: SparkSession, src: DataFrame,
                         sink: WarehouseSink, table: String,
                         keyCols: Seq[String], checkpointDir: String,
@@ -158,53 +162,47 @@ object CdcStream {
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val t0 = System.nanoTime()
         val split = deadLetterTable.isDefined
-        val persisted = split || metricsTable.isDefined
-        val cached = if (persisted) batch0.persist() else batch0
+        // cached once: the summary pass fills the cache that the
+        // dead-letter write and the MERGE both read
+        val cached = batch0.persist()
         try {
-          val rejected = deadLetterTable.map { dl =>
+          val summary = MergePipeline.summarize(cached, keyCols, numBuckets,
+            rejectedCol = if (split) Some("__rejected") else None)
+          deadLetterTable.foreach { dl =>
             val bad = cached.filter(col("__rejected"))
               .select(col("__raw").as("raw"),
                 col("__reject_reason").as("reason"),
                 lit(batchId).as("batch_id"))
-            val n = bad.count()
             // dynamic overwrite of THIS batch's partition: a replayed
             // batch (crash between these writes and the checkpoint
             // commit) rewrites its own rows instead of appending
             // duplicates — the same replay-idempotence the MERGE gives
             // the main table
-            if (n > 0) sink.write(bad, dl, "batch_id", Nil,
+            if (summary.rejected > 0) sink.write(bad, dl, "batch_id", Nil,
               dynamicOverwrite = true)
-            n
-          }.getOrElse(0L)
+          }
           val batch =
             if (split)
               cached.filter(!col("__rejected"))
                 .drop("__raw", "__reject_reason", "__rejected")
             else cached
-          // size probe is its own scan of the micro-batch file(s) — only
-          // strategies that actually consume the size pay for it (ADVICE
-          // r5: MaxBatchSizeWait polls its queue suppliers and ignores the
-          // observed size, so the scan was pure waste there); mergeBatch
-          // persists the batch internally
-          val needCount = throttle.needsBatchSize || metricsTable.isDefined
-          val observed = if (needCount) batch.count() else 0L
-          MergePipeline.mergeBatch(spark, sink, table, batch, keyCols,
-            keepDeletes, numBuckets, ordering)
+          if (summary.rows > 0)
+            MergePipeline.mergeBuckets(spark, sink, table, batch,
+              summary.buckets, keyCols, WarehouseSink.clusteringColumns(keyCols),
+              ordering, keepDeletes, numBuckets)
           offsets.put(Map(s"stream/$table" -> batchId.toString))
           // reference loop position: throttle AFTER the upload, before the
           // next poll (blocking foreachBatch delays the next trigger)
-          val waited = throttle.waitMs(observed)
+          val waited = throttle.waitMs(summary.rows)
           metricsTable.foreach { mt =>
             import spark.implicits._
             val wallMs = (System.nanoTime() - t0) / 1000000L
             sink.write(
-              Seq((batchId, observed, rejected, waited, wallMs))
+              Seq((batchId, summary.rows, summary.rejected, waited, wallMs))
                 .toDF("batch_id", "n_rows", "n_rejected", "wait_ms", "wall_ms"),
               mt, "batch_id", Nil, dynamicOverwrite = true)
           }
-        } finally {
-          if (persisted) cached.unpersist()
-        }
+        } finally cached.unpersist()
         ()
       }
     val triggered =
@@ -260,20 +258,12 @@ object CdcStream {
 trait BatchSizeWait {
   /** Block per strategy; returns total milliseconds waited. */
   def waitMs(observedBatchSize: Long): Long
-
-  /** Whether the strategy consumes `observedBatchSize` — lets the loop
-    * skip the per-batch size scan for strategies that ignore it
-    * (NoBatchSizeWait returns immediately; MaxBatchSizeWait watches its
-    * queue suppliers, mirroring the reference's, which ignores
-    * `numRecordsProcessed` too). */
-  def needsBatchSize: Boolean = true
 }
 
 /** Pass-through throttle — the reference's default
   * (batchsizewait/NoBatchSizeWait.java: `waitMs` returns immediately). */
 object NoBatchSizeWait extends BatchSizeWait {
   def waitMs(observedBatchSize: Long): Long = 0L
-  override def needsBatchSize: Boolean = false
 }
 
 /** Fill-or-timeout throttle — the reference's MaxBatchSizeWait
@@ -298,8 +288,6 @@ class MaxBatchSizeWait(val maxBatchSize: Int, val maxWaitMs: Long,
     * strategy (the reference's MaxBatchSizeWait ignores
     * `numRecordsProcessed` too) — it watches the queue suppliers. */
   def waitMs(observedBatchSize: Long): Long = waitMs(queuedSize, snapshotRunning)
-
-  override def needsBatchSize: Boolean = false
 
   /** Supplier-explicit variant (reference semantics, used by tests). */
   def waitMs(queued: () => Long,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
+import graft.cdc.MergePipeline
 import graft.llm.Dedup
 import graft.sinks.WarehouseSink
 import graft.state.OffsetStore
@@ -20,45 +21,39 @@ import graft.state.OffsetStore
   * corpus text.
   *
   * Scale shape per batch: O(batch) hashing map-side, a store probe pruned
-  * to the batch's fingerprint buckets, one partitioned append of accepted
-  * docs, one store append — nothing proportional to corpus size. With
+  * to the batch's fingerprint buckets, one bucket MERGE of the accepted
+  * docs (one shuffle, its touched buckets found by the same pass that
+  * counts the survivors), one store append — nothing proportional to
+  * corpus size. With
   * near-dup rejection on, the exact survivors are signed ONCE (shingle →
   * MinHash → band rows, persisted): those rows probe the band store and,
   * cut to the final survivors by a `left_semi` on doc_id, are the
   * band-store append. The stream loop reads each micro-batch from its
   * file(s) once — its metrics count fills the cache the probes read.
   * At a few hundred docs per batch the cost is per-job fixed cost, not
-  * data: one near-dup batch over existing stores runs ~46 Spark jobs
+  * data: one near-dup batch over existing stores runs ~42 Spark jobs
   * (most of them AQE query stages; CorpusIngestSpec pins the budget).
   * State across restarts is carried by the checkpoint + the store
   * layout, not executor memory (the [[CdcStream]] restart discipline). */
 object CorpusIngest {
 
-  /** Idempotent keyed upsert of documents: the corpus table is
-    * bucket-partitioned by hash(doc_id); each write unions the touched
-    * buckets with the incoming docs and dedups on doc_id before a
-    * dynamic overwrite. Re-running the same write converges to the same
-    * table — the property the crash-replay story below rests on. */
+  /** Idempotent keyed upsert of documents into the doc_id-bucketed
+    * corpus table, through the CDC bucket MERGE
+    * ([[MergePipeline.mergeBuckets]]: only the `touched` buckets are read
+    * back, one shuffle). A re-sent doc_id REPLACES the stored row — the
+    * latest batch wins — and among one batch's rows of a doc_id the
+    * greatest `text` wins, then the greatest hash of the row's other
+    * columns, so the pick does not depend on row order. Re-running the
+    * same write converges to the same table — the property the
+    * crash-replay story below rests on. */
   private def upsertDocs(spark: SparkSession, sink: WarehouseSink,
-                         table: String, docs: DataFrame,
+                         table: String, docs: DataFrame, touched: Set[Int],
                          numBuckets: Int): Unit = {
-    val bucket = WarehouseSink.bucketPartition(Seq("doc_id"), numBuckets)
-    if (!sink.tableExists(table)) {
-      sink.write(docs.withColumn("part_bucket", bucket), table,
-        "part_bucket", Seq("doc_id"))
-    } else {
-      val touched = docs.select(bucket.as("b")).distinct()
-        .collect().map(_.getInt(0))
-      val existing = sink.read(spark, table)
-        .filter(col("part_bucket").isin(touched.toIndexedSeq.map(b => lit(b)): _*))
-        .drop("part_bucket")
-      val merged = existing.unionByName(docs).dropDuplicates("doc_id")
-        .withColumn("part_bucket", bucket)
-      sink.write(merged, table, "part_bucket", Seq("doc_id"),
-        createDisposition = graft.sinks.CreateDisposition.CreateNever,
-        writeDisposition = graft.sinks.WriteDisposition.WriteAppend,
-        dynamicOverwrite = true)
-    }
+    val others = docs.columns.filterNot(_ == "doc_id").map(col).toSeq
+    MergePipeline.mergeBuckets(spark, sink, table, docs, touched,
+      keyCols = Seq("doc_id"), clusterCols = Seq("doc_id"),
+      ordering = Seq(col("text"), xxhash64(others: _*)),
+      keepDeletes = true, numBuckets = numBuckets, incomingWins = true)
   }
 
   /** One ingestion step, shared by the stream loop and batch backfills:
@@ -171,11 +166,14 @@ object CorpusIngest {
         (exactSurvivors.join(rejected, Seq("doc_id"), "left_anti").persist(),
           Some(dirPairs))
     }
-    // the count fills the survivors' cache that every write below reads
-    val n = survivors.count()
+    // one pass fills the survivors' cache that every write below reads,
+    // counting them and finding the corpus buckets they touch
+    val summary = MergePipeline.summarize(survivors, Seq("doc_id"), numBuckets)
+    val n = summary.rows
     dirPairs.foreach(_.unpersist())
     if (n > 0) {
-      upsertDocs(spark, sink, corpusTable, survivors, numBuckets)
+      upsertDocs(spark, sink, corpusTable, survivors, summary.buckets,
+        numBuckets)
       bands.foreach { b =>
         Dedup.writeMinhashBands(
           b.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),

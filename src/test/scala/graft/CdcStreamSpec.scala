@@ -152,6 +152,73 @@ class CdcStreamSpec extends AnyFunSuite with SparkFixture {
     assert(metrics === Set((0L, 1L, 2L), (1L, 1L, 0L)))
   }
 
+  test("job budget of one dead-letter micro-batch over an existing table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val inputDir = tmpDir("budget_in_")
+    val base = tmpDir("budget_state_")
+    val sink = new WarehouseSink(s"$base/warehouse")
+    val offsets = new OffsetStore(s"$base/offsets", spark)
+    val schemaJson =
+      """{"type":"struct","fields":[
+        |{"field":"user_id","type":"int64"},
+        |{"field":"event_id","type":"int64"},
+        |{"field":"__op","type":"string"},
+        |{"field":"__source_ts_ms","type":"int64","name":"io.debezium.time.Timestamp"}]}""".stripMargin
+    def write(f: String, mtimeMs: Long, lines: String*): Unit = {
+      new java.io.File(inputDir).mkdirs()
+      val p = java.nio.file.Paths.get(s"$inputDir/$f.txt")
+      java.nio.file.Files.writeString(p, lines.mkString("\n"))
+      p.toFile.setLastModified(mtimeMs)
+    }
+    def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = CdcStream.startJson(spark, inputDir, schemaJson, sink,
+        "budget_snapshot", Seq("user_id"), s"$base/checkpoint", offsets,
+        availableNow = true, maxFilesPerTrigger = 1,
+        deadLetterTable = Some("budget_rejects"))
+      q.awaitTermination(120000)
+      q
+    }
+    write("b0", 1700000000000L, (1 to 20).map(u =>
+      s"""{"user_id":$u,"event_id":$u,"__op":"c","__source_ts_ms":1000}"""): _*)
+    drain() // creates the table
+    // the measured batch: updates, a new key and a rejected line, so
+    // every step (dead-letter write, pruned read, MERGE) runs
+    write("b1", 1700000060000L, Seq(
+      """{"user_id":3,"event_id":30,"__op":"u","__source_ts_ms":2000}""",
+      """{"user_id":7,"event_id":31,"__op":"d","__source_ts_ms":2000}""",
+      """{"user_id":99,"event_id":32,"__op":"c","__source_ts_ms":2000}""",
+      """not json"""): _*)
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val marker = "cdc-stream-job-budget-end"
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => groups.put(e.jobId, g))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (groups.get(e.jobId) == marker) done.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = drain()
+      // events arrive in order: once the marker job's end is seen, every
+      // job of the micro-batch has been recorded
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      q
+    } finally sc.removeSparkListener(listener)
+    // a stream runs its jobs in a job group named by its run id
+    import scala.jdk.CollectionConverters._
+    val jobs = groups.values.asScala.count(_ == q.runId.toString)
+    info(s"jobs per dead-letter micro-batch: $jobs")
+    assert(jobs > 0 && jobs <= 7, s"$jobs jobs")
+    assert(sink.read(spark, "budget_snapshot").count() === 20) // 20 - 1 deleted + 1 new
+    assert(sink.read(spark, "budget_rejects").count() === 1)
+  }
+
   test("routed stream merges each destination into its own table") {
     import spark.implicits._
     val inputDir = tmpDir("routed_in_")

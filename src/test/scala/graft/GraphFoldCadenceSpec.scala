@@ -47,6 +47,13 @@ class GraphFoldCadenceSpec extends AnyFunSuite with SparkFixture {
     assert(out === Seq((0L, 1L), (1L, 5L), (4L, 5L)))
   }
 
+  test("knnKcore rejects iters = 0 before running any job") {
+    val e = intercept[IllegalArgumentException] {
+      Ann.knnKcore(spark.emptyDataFrame, iters = 0, graph = Some(graph))
+    }
+    assert(e.getMessage.contains("iters >= 1"))
+  }
+
   test("knnComponents roundsPerCkpt=2 equals the per-round fold, both exit arms, even and odd iters") {
     for (iters <- Seq(25, 7); ee <- Seq(true, false)) {
       val batched = Ann.knnComponents(spark.emptyDataFrame, iters = iters,

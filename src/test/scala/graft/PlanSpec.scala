@@ -214,6 +214,47 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       "bucket filter not applied as a partition filter")
   }
 
+  test("MERGE over an existing table writes through exactly one shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.col
+    val sink = new graft.sinks.WarehouseSink(tmpDir("plan_merge_shuffle_"))
+    val flat = graft.cdc.Cdc.flatten(Tables.events(spark, sfDir))
+    val cutoff = org.apache.spark.sql.functions.lit("2024-01-15").cast("timestamp")
+    // every node of a final adaptive plan: stages hold what they ran
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.put(qe.executedPlan)
+      override def onFailure(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      // the first write creates the table; the second is the MERGE
+      graft.cdc.MergePipeline.mergeBatch(spark, sink, "s",
+        flat.filter(col("ts") < cutoff), Seq("user_id"))
+      assert(writes.poll(60, java.util.concurrent.TimeUnit.SECONDS) != null)
+      graft.cdc.MergePipeline.mergeBatch(spark, sink, "s",
+        flat.filter(col("ts") >= cutoff), Seq("user_id"))
+      writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plan != null, "no MERGE write plan observed")
+    val shuffles = nodes(plan).count(_.isInstanceOf[ShuffleExchangeLike])
+    assert(shuffles === 1, s"MERGE write shuffles:\n$plan")
+  }
+
   test("text_unicode_audit is a shuffle-free projection of a pruned scan") {
     val p = planString(
       graft.llm.TextOps.textUnicodeAudit(Tables.documents(spark, sfDir)))

@@ -112,4 +112,85 @@ class StoresSpec extends AnyFunSuite with SparkFixture {
       "ALTER TABLE t ADD COLUMN b STRING",
       "ALTER TABLE t ALTER COLUMN a DROP NOT NULL"))
   }
+
+  test("stores read Spark-written generations followed by driver-written ones, latest wins") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // generations as earlier stores wrote them: one Spark write job each
+    val oPath = tmpDir("offsets_mixed_") + "/offsets"
+    Seq(Seq("k" -> "v0", "j" -> "a"), Seq("k" -> "v1")).zipWithIndex.foreach {
+      case (gen, seq) =>
+        gen.toDF("key", "value").withColumn("seq", lit(seq.toLong))
+          .coalesce(1).write.mode("append").parquet(oPath)
+    }
+    val sparkSchema = spark.read.parquet(oPath).schema
+    val store = new OffsetStore(oPath, spark, compactEvery = 3)
+    assert(store.load() === Map("k" -> "v1", "j" -> "a"))
+    store.put(Map("k" -> "v2", "i" -> "x")) // seq 2
+    assert(new OffsetStore(oPath, spark).load() === Map("k" -> "v2", "j" -> "a", "i" -> "x"))
+    store.put(Map("j" -> "b")) // seq 3: compacts Spark- and driver-written files together
+    val reopened = new OffsetStore(oPath, spark)
+    assert(reopened.load() === Map("k" -> "v2", "j" -> "b", "i" -> "x"))
+    reopened.put(Map("k" -> "v4"))
+    assert(new OffsetStore(oPath, spark).load()("k") === "v4")
+    // only driver-written files are left, and they read with the schema
+    // the Spark-written ones had
+    assert(spark.read.parquet(oPath).schema === sparkSchema)
+
+    val hPath = tmpDir("hist_mixed_") + "/history"
+    (0 until 2).foreach { i =>
+      Seq((i.toLong, s"DDL $i", 0L)).toDF("seq", "entry", "recorded_at_ms")
+        .coalesce(1).write.mode("append").parquet(hPath)
+    }
+    val hist = new SchemaHistory(hPath, spark, compactEvery = 3)
+    hist.record("DDL 2")
+    hist.record("DDL 3") // seq 3: compaction over both kinds of file
+    hist.record("DDL 4")
+    assert(new SchemaHistory(hPath, spark).replay() === (0 to 4).map(i => s"DDL $i"))
+  }
+
+  test("a put leaves one part file per generation and no temp file behind") {
+    val path = tmpDir("offsets_tmp_") + "/offsets"
+    val store = new OffsetStore(path, spark)
+    (0 until 3).foreach(i => store.put(Map("k" -> s"v$i")))
+    val names = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(path))
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSeq
+      finally s.close()
+    }
+    val data = names.filterNot(n => n.startsWith(".") || n.startsWith("_"))
+    assert(data.size === 3 && data.forall(_.startsWith("part-")), names)
+    // hidden entries are only the data files' checksum shadows
+    assert(names.filter(_.startsWith(".")).forall(n =>
+      n.startsWith(".part-") && n.endsWith(".crc")), names)
+    assert(!names.exists(_.contains(".tmp")), names)
+    // and readers list exactly those files
+    assert(spark.read.parquet(path).inputFiles.length === 3)
+
+    val hPath = tmpDir("hist_tmp_") + "/history"
+    val hist = new SchemaHistory(hPath, spark)
+    hist.record("CREATE TABLE t (a INT)")
+    assert(spark.read.parquet(hPath).inputFiles.length === 1)
+    assert(!new java.io.File(hPath).list().exists(_.contains(".tmp")))
+  }
+
+  test("an empty-map generation marks the store as written and loads empty") {
+    val path = tmpDir("offsets_marker_") + "/offsets"
+    val store = new OffsetStore(path, spark)
+    assert(!store.exists)
+    store.put(Map.empty)
+    assert(store.exists)
+    assert(store.load() === Map.empty)
+    assert(new OffsetStore(path, spark).load() === Map.empty)
+    // a marker-only store is "already written": migration stays a no-op
+    val f = java.nio.file.Files.createTempFile("offsets_", ".dat")
+    val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(f))
+    try {
+      val m = new java.util.HashMap[Array[Byte], Array[Byte]]()
+      m.put("k".getBytes("UTF-8"), "v".getBytes("UTF-8"))
+      out.writeObject(m)
+    } finally out.close()
+    assert(!store.migrateFromFile(f.toString))
+    assert(new OffsetStore(path, spark).load() === Map.empty)
+  }
 }

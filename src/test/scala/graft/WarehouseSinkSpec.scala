@@ -73,6 +73,19 @@ class WarehouseSinkSpec extends AnyFunSuite with SparkFixture {
     val want = graft.cdc.Cdc.upsertSnapshot(events)
       .select(got.columns.map(col): _*)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    // each bucket is one file, its rows in cluster order (key, source ts)
+    val buckets = Files.list(Paths.get(sink.tablePath("snap"))).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.contains("part_bucket="))
+    assert(buckets.nonEmpty)
+    buckets.foreach { dir =>
+      val files = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-"))
+      assert(files.length === 1, dir)
+      val rows = spark.read.parquet(files.head.toString)
+        .select(col("user_id"), col("__source_ts_ms").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(rows === rows.sorted, dir)
+    }
   }
 
   test("MERGE with a non-default bucket count lays out and matches the snapshot") {
