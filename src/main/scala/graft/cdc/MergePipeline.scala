@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.{CreateDisposition, WarehouseSink, WriteDisposition}
+import graft.sinks.{BucketStore, CreateDisposition, WarehouseSink, WriteDisposition}
 
 /** Incremental changelog → snapshot MERGE on top of the partitioned
   * warehouse — the scale-safe replacement for recomputing the snapshot
@@ -14,9 +14,10 @@ import graft.sinks.{CreateDisposition, WarehouseSink, WriteDisposition}
   * The snapshot table is partitioned by a stable key-hash bucket
   * (`part_bucket`), so per batch the cost is O(batch + touched buckets),
   * NOT O(history):
-  *  1. one shuffle-free job over the cached batch ([[summarize]]) yields
-  *     its row count and the set of buckets it touches (≤ numBuckets
-  *     values, a bit set per task);
+  *  1. one shuffle-free job over the cached batch
+  *     ([[BucketStore.summarize]], shared with every bucketed
+  *     store's probe) yields its row count and the set of buckets it
+  *     touches (≤ numBuckets values, a bit set per task);
   *  2. ONLY those snapshot buckets are read back — `part_bucket IN (...)`
   *     prunes directories at planning time, and because a key's bucket is
   *     stable no stale row can hide in an unread partition;
@@ -109,7 +110,7 @@ object MergePipeline {
       // persist it so the source computes once
       val cached = batch.persist()
       try {
-        val s = summarize(cached, keyCols, numBuckets)
+        val s = BucketStore.summarize(cached, keyCols, numBuckets)
         if (s.rows > 0)
           mergeBuckets(spark, sink, table, cached, s.buckets, keyCols,
             clusterCols, ordering, keepDeletes, numBuckets)
@@ -117,35 +118,10 @@ object MergePipeline {
     }
   }
 
-  /** What one pass over a micro-batch yields: its accepted rows, its
-    * rejected rows, and the buckets the accepted rows touch. */
-  private[graft] final case class BatchSummary(rows: Long, rejected: Long,
-                                               buckets: Set[Int])
-
-  /** ONE job, no shuffle, over `batch` (cache it first: this pass fills
-    * the cache the MERGE then reads): each task folds its rows into
-    * (accepted, rejected, bit set of buckets) and the driver ORs the
-    * bit sets. A row is rejected when `rejectedCol` is true; without
-    * one every row is accepted. */
-  private[graft] def summarize(batch: DataFrame, keyCols: Seq[String],
-                               numBuckets: Int,
-                               rejectedCol: Option[String] = None): BatchSummary = {
-    val bucket = WarehouseSink.bucketPartition(keyCols, numBuckets)
-    // buckets are ≥ 0 (pmod); -1 marks a rejected row
-    val tagged = rejectedCol.fold(bucket)(r => when(col(r), lit(-1)).otherwise(bucket))
-    val (rows, rejected, buckets) = batch.select(tagged).queryExecution.toRdd
-      .aggregate((0L, 0L, new scala.collection.mutable.BitSet(numBuckets)))(
-        { case ((n, r, bs), row) =>
-            val b = row.getInt(0)
-            if (b < 0) (n, r + 1, bs) else (n + 1, r, bs += b) },
-        { case ((n1, r1, b1), (n2, r2, b2)) => (n1 + n2, r1 + r2, b1 |= b2) })
-    BatchSummary(rows, rejected, buckets.toSet)
-  }
-
   /** The bucket MERGE behind [[mergeBatch]], the CDC stream and the
     * corpus upsert: `batch` (already cached by the caller, and the
-    * buckets it `touched` already known — see [[summarize]]) is merged
-    * into `table`, latest-wins per key by `ordering`. With
+    * buckets it `touched` already known — see [[BucketStore.summarize]])
+    * is merged into `table`, latest-wins per key by `ordering`. With
     * `incomingWins`, any batch row beats any stored row of its key and
     * `ordering` only picks among the batch's own rows. When the table
     * does not exist yet, `touched` is unused and the batch alone is

@@ -2,8 +2,10 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.sinks.BucketStore
 
 /** Similarity search and embedding near-dup over `embeddings`
   * (vec_id, embedding: array<float> 64-d, label).
@@ -3406,9 +3408,9 @@ object Ann {
   // Sixth member of the store family (exact / minhash / simhash / embed /
   // spans / semantic). Two tables: `<table>_centroids` freezes the
   // quantizer (nlist × dim doubles — KBs at any realistic nlist), and
-  // `<table>` holds one (vec_id, cid, v) row per corpus vector,
-  // bucket-partitioned by hash(cid) so a batch probe reads ONLY the cells
-  // the batch lands in. The frozen quantizer is the point: a daily batch
+  // `<table>` holds one (vec_id, v, cid) row per corpus vector, a
+  // [[graft.sinks.BucketStore]] on cid, so a batch probe reads ONLY the
+  // cells the batch lands in. The frozen quantizer is the point: a daily batch
   // neither re-trains nor re-reads the corpus — O(batch + touched cells).
 
   /** Build (or, with `append = true`, extend) the semantic cell store.
@@ -3429,27 +3431,35 @@ object Ann {
       else {
         val c = trainOnUnit(vecs, nlist, iters, trainPerCell)
         import embeddings.sparkSession.implicits._
-        sink.write(
-          c.zipWithIndex.map { case (v, j) => (j, v.toSeq) }
-            .toDF("cid", "v").withColumn("part_bucket", lit(0)),
-          s"${table}_centroids", "part_bucket", Seq("cid"),
-          writeDisposition = graft.sinks.WriteDisposition.WriteTruncate)
+        centroidStore(table).write(sink,
+          c.zipWithIndex.map { case (v, j) => (j, v.toSeq) }.toDF("cid", "v"),
+          append = false)
         c
       }
-    val rows = assignCells(vecs, coarse)
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("cid"), numBuckets))
-    sink.write(rows, table, "part_bucket", Seq("cid"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
+    semanticStore(table, numBuckets).write(sink, assignCells(vecs, coarse), append)
     vecs.unpersist()
   }
+
+  /** The semantic cell store: one row per corpus vector, bucketed by cid. */
+  private[graft] def semanticStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("cid"), Seq("cid"),
+      StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>, cid INT"), numBuckets)
+
+  /** A frozen quantizer table (semantic centroids, IVF-PQ coarse cells
+    * and codebooks): KBs in one bucket, always read whole. */
+  private def quantizerStore(table: String, key: String, ddl: String): BucketStore =
+    BucketStore(table, Seq(key), Seq(key), StructType.fromDDL(ddl), 1)
+  private[graft] def centroidStore(table: String): BucketStore =
+    quantizerStore(s"${table}_centroids", "cid", "cid INT, v ARRAY<DOUBLE>")
+  private[graft] def coarseStore(table: String): BucketStore =
+    quantizerStore(s"${table}_coarse", "cid", "cid INT, v ARRAY<DOUBLE>, nb INT")
+  private[graft] def codebookStore(table: String): BucketStore =
+    quantizerStore(s"${table}_codebooks", "j", "j INT, c INT, v ARRAY<DOUBLE>")
 
   private def readCentroids(spark: SparkSession,
                             sink: graft.sinks.WarehouseSink,
                             table: String): Seq[Array[Double]] =
-    sink.read(spark, s"${table}_centroids")
+    centroidStore(table).readAll(spark, sink)
       .select("cid", "v").orderBy("cid").collect()
       .map(_.getSeq[Double](1).toArray).toSeq
 
@@ -3470,13 +3480,9 @@ object Ann {
                                numBuckets: Int = 32): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
     val coarse = readCentroids(spark, sink, table)
-    val batch = assignCells(unitVecs(newEmbeddings), coarse)
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("cid"), numBuckets))
-      .persist()
-    val touched = batch.select("part_bucket").distinct().collect().map(_.getInt(0))
-    val store = sink.read(spark, table)
-      .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
+    val layout = semanticStore(table, numBuckets)
+    val batch = assignCells(unitVecs(newEmbeddings), coarse).persist()
+    val store = layout.read(spark, sink, layout.touched(batch).buckets)
     val cross = store.as("c")
       .join(batch.as("n"),
         col("c.cid") === col("n.cid") && col("c.vec_id") =!= col("n.vec_id"))
@@ -3518,8 +3524,9 @@ object Ann {
   // `<table>_codebooks` (m × ksub × dsub doubles) freeze the quantizers;
   // `<table>` holds one (vec_id, cid, codes) row per corpus vector —
   // ~m bytes of codes plus the id, the PQ compression that makes a
-  // 100 TB corpus's index fit a warehouse table — bucket-partitioned by
-  // hash(cid) so a probe reads ONLY the nprobe cells it lands in.
+  // 100 TB corpus's index fit a warehouse table — a
+  // [[graft.sinks.BucketStore]] on cid, so a probe reads ONLY the nprobe
+  // cells it lands in.
 
   /** Build (or, with `append = true`, extend) the persisted IVF-PQ
     * index. On append the STORED quantizers define the geometry — the
@@ -3561,33 +3568,26 @@ object Ann {
         // joined back down (each Lloyd action re-executes its input —
         // over the corpus that wasted iters+1 full argmax passes)
         val ce = trainSubCodebooks(residuals(train, co), m, dsub, ksub, iters)
-        sink.write(
-          co.zipWithIndex.map { case (v, j) => (j, v.toSeq) }
-            .toDF("cid", "v").withColumn("nb", lit(numBuckets))
-            .withColumn("part_bucket", lit(0)),
-          s"${table}_coarse", "part_bucket", Seq("cid"),
-          writeDisposition = graft.sinks.WriteDisposition.WriteTruncate)
-        sink.write(
-          ce.zipWithIndex.flatMap { case (cb, j) =>
-            cb.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
-          }.toSeq.toDF("j", "c", "v").withColumn("part_bucket", lit(0)),
-          s"${table}_codebooks", "part_bucket", Seq("j"),
-          writeDisposition = graft.sinks.WriteDisposition.WriteTruncate)
+        coarseStore(table).write(sink, co.zipWithIndex.map { case (v, j) => (j, v.toSeq) }
+          .toDF("cid", "v").withColumn("nb", lit(numBuckets)), append = false)
+        codebookStore(table).write(sink, ce.zipWithIndex.flatMap { case (cb, j) =>
+          cb.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
+        }.toSeq.toDF("j", "c", "v"), append = false)
         (co, ce, numBuckets)
       }
     val dsubEff = cents(0)(0).length
     require(dim == cents.length * dsubEff,
       s"dim $dim does not match stored codebooks ${cents.length}×$dsubEff")
-    val encoded = residuals(vecs, coarse)
-      .select(col("vec_id"), col("cid"), pqCodesCol(cents, dsubEff).as("codes"))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("cid"), nb))
-    sink.write(encoded, table, "part_bucket", Seq("cid"),
-      writeDisposition =
-        if (appending) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
+    ivfPqStore(table, nb).write(sink, residuals(vecs, coarse)
+      .select(col("vec_id"), col("cid"), pqCodesCol(cents, dsubEff).as("codes")),
+      appending)
     vecs.unpersist()
   }
+
+  /** The IVF-PQ code table: one row per corpus vector, bucketed by cid. */
+  private[graft] def ivfPqStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("cid"), Seq("cid"),
+      StructType.fromDDL("vec_id BIGINT, cid INT, codes ARRAY<INT>"), numBuckets)
 
   /** Residual frame (vec_id, cid, v − c_cid) under a fixed coarse
     * quantizer — the encode-side geometry [[annIvfPqTopK]] and the
@@ -3606,25 +3606,20 @@ object Ann {
   /** One read of `<table>_coarse` yields BOTH the centroids and the
     * bucket modulus the index was built with — probes and appends must
     * use the stored modulus, not their own default, or pruning misses
-    * rows. Indexes persisted before the `nb` column existed fall back to
-    * the 32 they were in fact built with. */
+    * rows. Indexes persisted before the `nb` column existed read it as
+    * NULL and fall back to the 32 they were in fact built with. */
   private def readCoarse(spark: SparkSession, sink: graft.sinks.WarehouseSink,
                          table: String): (Seq[Array[Double]], Int) = {
-    val df = sink.read(spark, s"${table}_coarse")
-    val hasNb = df.columns.contains("nb")
-    val rows = df
-      .select(col("cid") +: col("v") +:
-        (if (hasNb) Seq(col("nb")) else Seq.empty): _*)
-      .orderBy("cid").collect()
-    val cents = rows.map(_.getSeq[Double](1).toArray).toSeq
-    val nb = if (hasNb) rows.head.getInt(2) else 32
-    (cents, nb)
+    val rows = coarseStore(table).readAll(spark, sink)
+      .select("cid", "v", "nb").orderBy("cid").collect()
+    (rows.map(_.getSeq[Double](1).toArray).toSeq,
+      if (rows.head.isNullAt(2)) 32 else rows.head.getInt(2))
   }
 
   private def readCodebooks(spark: SparkSession,
                             sink: graft.sinks.WarehouseSink,
                             table: String): Array[Array[Array[Double]]] =
-    sink.read(spark, s"${table}_codebooks")
+    codebookStore(table).readAll(spark, sink)
       .select("j", "c", "v").orderBy("j", "c").collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
@@ -3665,13 +3660,10 @@ object Ann {
       (qid, pqLut(qv, cents, dsub))
     }.toSeq
     import spark.implicits._
-    // bucket pruning: probed cids → their partitions, driver-side
-    val touched = probes.map(_._2).distinct.toDF("cid")
-      .withColumn("pb",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("cid"), numBuckets))
-      .select("pb").distinct().collect().map(_.getInt(0))
-    val store = sink.read(spark, table)
-      .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
+    // bucket pruning: probed cids → their partitions
+    val layout = ivfPqStore(table, numBuckets)
+    val store = layout.read(spark, sink,
+      layout.touched(probes.map(_._2).distinct.toDF("cid")).buckets)
     val probeDf = broadcast(probes.toDF("query_id", "cid", "qdotc"))
     val lutDf = broadcast(luts.toDF("query_id", "lut"))
     val ascore = col("qdotc") + pqAdcScore(m, kEff)
@@ -3702,7 +3694,7 @@ object Ann {
 
   /** Build (or, with `append = true`, extend) the vector LSH store: one
     * row per (vec_id, tbl, bucket) with the vector and its norm riding
-    * along, bucket-partitioned by hash(tbl, bucket) — [[dedupEmbed]] made
+    * along, a [[graft.sinks.BucketStore]] on (tbl, bucket) — [[dedupEmbed]] made
     * incremental, completing the trilogy with
     * [[graft.llm.Dedup.buildFingerprintStore]] (exact) and
     * [[graft.llm.Dedup.buildMinhashStore]] (text near-dup). The vector is
@@ -3712,20 +3704,26 @@ object Ann {
                       table: String = "embed_lsh",
                       numBands: Int = NumBands, bitsPerBand: Int = BitsPerBand,
                       numBuckets: Int = 32,
-                      append: Boolean = false): Unit = {
+                      append: Boolean = false): Unit =
+    embedStore(table, numBuckets).write(sink,
+      embedBandRows(embeddings, numBands, bitsPerBand), append)
+
+  /** The vector LSH store: one row per vector and LSH table. */
+  private[graft] def embedStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("tbl", "bucket"), Seq("bucket"),
+      StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, tbl INT, bucket INT"),
+      numBuckets)
+
+  /** LSH band rows of an embedding frame, vector and norm riding along. */
+  private def embedBandRows(embeddings: DataFrame, numBands: Int,
+                            bitsPerBand: Int): DataFrame = {
     graft.functions.VectorFunctions.register(embeddings.sparkSession)
-    val rows = embeddings
+    embeddings
       .select(col("vec_id"), vecAsDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
       .select(col("vec_id"), col("v"), col("nrm"),
         posexplode(lshBucketInts(col("v"), numBands, bitsPerBand))
           .as(Seq("tbl", "bucket")))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("tbl", "bucket"), numBuckets))
-    sink.write(rows, table, "part_bucket", Seq("bucket"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
   }
 
   /** Near-dup pairs of a NEW vector batch: against the stored corpus (LSH
@@ -3742,26 +3740,11 @@ object Ann {
                             numBuckets: Int = 32): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
     // the one persisted frame: band rows with vector+norm riding along —
-    // referenced by the touched-bucket probe, the store cross-join and
+    // referenced by the touched-bucket pass, the store cross-join and
     // the within-batch self-join (both sides)
-    val bands = newEmbeddings
-      .select(col("vec_id"), vecAsDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .select(col("vec_id"), col("v"), col("nrm"),
-        posexplode(lshBucketInts(col("v"), numBands, bitsPerBand))
-          .as(Seq("tbl", "bucket")))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("tbl", "bucket"), numBuckets))
-      .persist()
-    val touched = bands.select("part_bucket").distinct().collect().map(_.getInt(0))
-    // an absent store (first ingest of a fresh corpus) reads as empty
-    val store =
-      if (!sink.tableExists(table))
-        spark.range(0).select(col("id").as("vec_id"),
-          array().cast("array<double>").as("v"), lit(0.0).as("nrm"),
-          lit(0).as("tbl"), lit(0).as("bucket"))
-      else sink.read(spark, table)
-        .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
+    val bands = embedBandRows(newEmbeddings, numBands, bitsPerBand).persist()
+    val layout = embedStore(table, numBuckets)
+    val store = layout.read(spark, sink, layout.touched(bands).buckets)
     // verification happens ON the collision rows (vectors ride both
     // sides), τ filters inside the join stage, and only survivors —
     // already the output set — reach the final pair-level dedup; the

@@ -2,8 +2,10 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.sinks.BucketStore
 
 /** Document deduplication for LLM training corpora, over `documents`.
   *
@@ -1043,6 +1045,11 @@ object Dedup {
     buildSigBlockStore(simhashSigs(shingleHashes(docs)), sink, table,
       numBuckets, append)
 
+  /** The pigeonhole block store: four rows per doc, bucketed by (blk, v). */
+  private[graft] def sigBlockStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("blk", "v"), Seq("v"),
+      StructType.fromDDL("doc_id BIGINT, sig BIGINT, blk INT, v BIGINT"), numBuckets)
+
   /** The signature-agnostic core of [[buildSimhashStore]]: any
     * (doc_id, sig: long) frame lands as a pigeonhole block store —
     * text SimHash and image dHash ([[Multimodal.mediaPhash]]) share
@@ -1051,15 +1058,8 @@ object Dedup {
     * signature alone. */
   def buildSigBlockStore(sigs: DataFrame, sink: graft.sinks.WarehouseSink,
                          table: String, numBuckets: Int = 32,
-                         append: Boolean = false): Unit = {
-    val rows = simhashBlocks(sigs)
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("blk", "v"), numBuckets))
-    sink.write(rows, table, "part_bucket", Seq("v"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
-  }
+                         append: Boolean = false): Unit =
+    sigBlockStore(table, numBuckets).write(sink, simhashBlocks(sigs), append)
 
   /** Hamming-≤`maxHamming` near-dup pairs of a NEW batch vs the stored
     * corpus (block-store probe, bucket-pruned) plus within the batch —
@@ -1086,21 +1086,12 @@ object Dedup {
                           numBuckets: Int = 32): DataFrame = {
     require(maxHamming <= 3,
       s"4-block pigeonhole banding is complete only for hamming <= 3, got $maxHamming")
-    // blocks is the only frame referenced more than once (cross + within
-    // arms); sigs feeds it exactly once, so persisting blocks suffices
-    val blocks = simhashBlocks(newSigs)
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("blk", "v"), numBuckets))
-      .persist()
-    val touched = blocks.select("part_bucket").distinct().collect().map(_.getInt(0))
-    // an absent store (first ingest of a fresh corpus) reads as empty
-    val store =
-      if (!sink.tableExists(table))
-        spark.range(0).select(col("id").as("doc_id"), lit(0L).as("sig"),
-          lit(0).as("blk"), lit(0L).as("v"))
-      else sink.read(spark, table)
-        .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
-        .select("doc_id", "sig", "blk", "v")
+    val layout = sigBlockStore(table, numBuckets)
+    // blocks is the only frame referenced more than once (bucket pass,
+    // cross + within arms), so persisting it suffices
+    val blocks = simhashBlocks(newSigs).persist()
+    val store = layout.read(spark, sink, layout.touched(blocks).buckets)
+      .select("doc_id", "sig", "blk", "v")
     val cross = store.as("c")
       .join(blocks.as("n"),
         col("c.blk") === col("n.blk") && col("c.v") === col("n.v") &&
@@ -1110,7 +1101,7 @@ object Dedup {
         bit_count(col("c.sig").bitwiseXOR(col("n.sig"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    val within = simhashPairs(blocks.drop("part_bucket"), maxHamming)
+    val within = simhashPairs(blocks, maxHamming)
     val result = graft.Exec.materialize(
       cross.unionByName(within).dropDuplicates("doc_a", "doc_b"))
     blocks.unpersist()
@@ -1536,33 +1527,30 @@ object Dedup {
 
   // --- Incremental dedup against a persisted fingerprint store ---
 
-  /** Build (or rebuild) the exact-fingerprint store for a corpus: one row
-    * per distinct content hash with its keeper (min doc_id), laid out as a
-    * key-hash-bucketed warehouse table ([[graft.sinks.WarehouseSink]]'s
-    * snapshot layout, bucketed on the fingerprint).
+  /** Build (or extend) the exact-fingerprint store for a corpus: one row
+    * per distinct content hash with its keeper (min doc_id), a
+    * [[graft.sinks.BucketStore]] bucketed on the fingerprint.
     *
     * This is the piece that makes dedup INCREMENTAL at 100 TB: once the
     * corpus is fingerprinted, a new batch never re-reads corpus text —
     * it joins the store, and because the store is bucket-partitioned by
     * fingerprint hash, the join reads only the buckets the batch's own
     * fingerprints land in (partition pruning, same property the CDC MERGE
-    * uses). Growing the store with the batch's accepted keepers is a
-    * [[graft.cdc.MergePipeline.mergeBatch]]-shaped upsert on the same
-    * layout. */
+    * uses). Growing the store appends the batch's accepted keepers
+    * (`append = true`), as [[graft.streaming.CorpusIngest]] does after
+    * every batch. */
   def buildFingerprintStore(docs: DataFrame, sink: graft.sinks.WarehouseSink,
                             table: String = "fingerprints",
                             numBuckets: Int = 32,
-                            append: Boolean = false): Unit = {
-    val idx = docs
-      .groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("keeper"))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("h"), numBuckets))
-    sink.write(idx, table, "part_bucket", Seq("h"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
-  }
+                            append: Boolean = false): Unit =
+    fingerprintStore(table, numBuckets).write(sink,
+      docs.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("keeper")),
+      append)
+
+  /** The exact-fingerprint store: one row per content hash. */
+  private[graft] def fingerprintStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("h"), Seq("h"),
+      StructType.fromDDL("h STRING, keeper BIGINT"), numBuckets)
 
   /** Bloom sidecar for the fingerprint store: one row per bucket holding
     * a Bloom filter over that bucket's content hashes (Spark's native
@@ -1585,7 +1573,8 @@ object Dedup {
                             table: String = "fingerprints",
                             expectedPerBucket: Long = 100000L): Unit = {
     graft.functions.VectorFunctions.register(spark)
-    val store = sink.read(spark, table)
+    // the bucket count does not enter a read
+    val store = fingerprintStore(table, 32).readAll(spark, sink)
     // freshness stamp: the store's row count at build time rides on
     // every sidecar row. A probe whose own count disagrees knows the
     // sidecar is STALE (e.g. a crash between store append and sidecar
@@ -1604,31 +1593,32 @@ object Dedup {
   }
 
   /** The Bloom pruning decision of [[dedupIncrementalBloom]], visible
-    * for the spec: buckets of `b` (doc_id, h, part_bucket rows) where
-    * at least one batch hash might be present in the store. Falls back
-    * to all touched buckets when no sidecar exists OR when the
+    * for the spec: of the buckets `touched` by `b` (doc_id, h rows), those
+    * where at least one batch hash might be present in the store. Falls
+    * back to all of `touched` when no sidecar exists OR when the
     * sidecar's freshness stamp disagrees with the store's current row
     * count (stale sidecar = possible false negatives = missed
     * duplicates; the fallback keeps crash-replay convergent). */
-  private[graft] def bloomCandidates(b: DataFrame, spark: SparkSession,
+  private[graft] def bloomCandidates(b: DataFrame, touched: Set[Int],
+                                     spark: SparkSession,
                                      sink: graft.sinks.WarehouseSink,
-                                     table: String): Array[Int] = {
+                                     table: String, numBuckets: Int): Set[Int] = {
+    val layout = fingerprintStore(table, numBuckets)
     val bloomPath = sink.tablePath(s"${table}_bloom")
-    def allTouched = b.select("part_bucket").distinct().collect().map(_.getInt(0))
-    if (!sink.tableExists(table)) Array.empty
-    else if (!new java.io.File(bloomPath).exists()) allTouched
+    if (!sink.tableExists(table)) Set.empty
+    else if (!new java.io.File(bloomPath).exists()) touched
     else {
       graft.functions.VectorFunctions.register(spark)
       val blooms = spark.read.parquet(bloomPath)
       val stamped = blooms.select(col("store_rows")).head().getLong(0)
-      if (stamped != sink.read(spark, table).count()) allTouched
+      if (stamped != layout.readAll(spark, sink).count()) touched
       else
         // blooms are KBs/bucket: broadcast onto the batch, keep buckets
         // with ≥1 possible hit. bloom_hit is a map-side predicate whose
         // per-partition deserialization is cached by array reference.
-        b.join(broadcast(blooms), Seq("part_bucket"))
-          .filter(expr("bloom_hit(bloom, xxhash64(h))"))
-          .select("part_bucket").distinct().collect().map(_.getInt(0))
+        layout.touched(layout.withBucket(b)
+          .join(broadcast(blooms), Seq("part_bucket"))
+          .filter(expr("bloom_hit(bloom, xxhash64(h))"))).buckets
     }
   }
 
@@ -1640,32 +1630,8 @@ object Dedup {
   def dedupIncrementalBloom(newDocs: DataFrame, spark: SparkSession,
                             sink: graft.sinks.WarehouseSink,
                             table: String = "fingerprints",
-                            numBuckets: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = newDocs.select(col("doc_id"), md5(col("text")).as("h"))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("h"), numBuckets))
-      .persist()
-    val candidates = bloomCandidates(b, spark, sink, table)
-    val store =
-      if (candidates.isEmpty) {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("h", "keeper")
-      } else sink.read(spark, table)
-        .filter(col("part_bucket")
-          .isin(candidates.toIndexedSeq.map(c => lit(c)): _*))
-        .select(col("h"), col("keeper"))
-    val firstInBatch = min(col("doc_id")).over(Window.partitionBy(col("h")))
-    val result = graft.Exec.materialize(
-      b.withColumn("first_b", firstInBatch)
-        .join(store, Seq("h"), "left")
-        .select(col("doc_id"),
-          coalesce(col("keeper"),
-            when(col("first_b") < col("doc_id"), col("first_b")),
-            lit(-1L)).as("dup_of")))
-    b.unpersist()
-    result
-  }
+                            numBuckets: Int = 32): DataFrame =
+    probeFingerprints(newDocs, spark, sink, table, numBuckets, bloom = true)._1
 
   /** Dedup a NEW batch of documents against the fingerprint store WITHOUT
     * touching corpus text: per batch doc, `dup_of` = the store's keeper
@@ -1676,22 +1642,25 @@ object Dedup {
   def dedupIncremental(newDocs: DataFrame, spark: SparkSession,
                        sink: graft.sinks.WarehouseSink,
                        table: String = "fingerprints",
-                       numBuckets: Int = 32): DataFrame = {
+                       numBuckets: Int = 32): DataFrame =
+    probeFingerprints(newDocs, spark, sink, table, numBuckets, bloom = false)._1
+
+  /** The exact probe behind [[dedupIncremental]] and, reading only the
+    * [[bloomCandidates]] of the touched buckets, [[dedupIncrementalBloom]]:
+    * the (doc_id, dup_of) frame and the batch's row count (one fingerprint
+    * row per input doc, counted by the bucket pass). */
+  private[graft] def probeFingerprints(newDocs: DataFrame, spark: SparkSession,
+                                       sink: graft.sinks.WarehouseSink,
+                                       table: String, numBuckets: Int,
+                                       bloom: Boolean): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
-    val b = newDocs.select(col("doc_id"), md5(col("text")).as("h"))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("h"), numBuckets))
-      .persist()
-    // buckets this batch's fingerprints land in — bounded by numBuckets;
-    // an absent store (first ingest of a fresh corpus) reads as empty
-    val touched = b.select("part_bucket").distinct().collect().map(_.getInt(0))
-    val store =
-      if (!sink.tableExists(table)) {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("h", "keeper")
-      } else sink.read(spark, table)
-        .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
-        .select(col("h"), col("keeper"))
+    val layout = fingerprintStore(table, numBuckets)
+    val b = newDocs.select(col("doc_id"), md5(col("text")).as("h")).persist()
+    val summary = layout.touched(b)
+    val buckets =
+      if (bloom) bloomCandidates(b, summary.buckets, spark, sink, table, numBuckets)
+      else summary.buckets
+    val store = layout.read(spark, sink, buckets).select(col("h"), col("keeper"))
     // within-batch keep-first rides the same shuffle key as the store join
     val firstInBatch = min(col("doc_id")).over(Window.partitionBy(col("h")))
     val result = graft.Exec.materialize(
@@ -1702,7 +1671,7 @@ object Dedup {
             when(col("first_b") < col("doc_id"), col("first_b")),
             lit(-1L)).as("dup_of")))
     b.unpersist()
-    result
+    (result, summary.rows)
   }
 
   /** Driver query for the Bloom-pruned probe: same split, same output
@@ -1731,7 +1700,7 @@ object Dedup {
       spark, sink)
   }
 
-  /** Packed LSH band rows (doc_id, band, bh, sigb, part_bucket) of a
+  /** Packed LSH band rows (doc_id, band, bh, sigb) of a
     * document frame — the one signing step behind [[buildMinhashStore]],
     * [[dedupIncrementalMinhash]] and the corpus-ingest loop, which signs
     * a batch ONCE, probes with these rows and appends the survivors' rows
@@ -1739,35 +1708,26 @@ object Dedup {
     * The vector functions are registered on `docs`' own session: a
     * streaming micro-batch is analyzed by the stream's cloned session,
     * whose registry a registration on the outer session never reaches. */
-  private[graft] def minhashBandRows(docs: DataFrame,
-                                     numBuckets: Int): DataFrame = {
+  private[graft] def minhashBandRows(docs: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(docs.sparkSession)
     bandRows(minhashSigs(shingleHashes(docs)))
       .withColumn("sigb", graft.functions.VectorFunctions.packLongs(col("sig")))
       .drop("sig")
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("band", "bh"), numBuckets))
   }
 
-  /** Write [[minhashBandRows]] output as the band store (truncate) or
-    * onto it (`append`). */
-  private[graft] def writeMinhashBands(rows: DataFrame,
-                                       sink: graft.sinks.WarehouseSink,
-                                       table: String,
-                                       append: Boolean): Unit =
-    sink.write(rows, table, "part_bucket", Seq("bh"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
+  /** The MinHash band store: [[minhashBandRows]], bucketed by (band, bh). */
+  private[graft] def minhashStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("band", "bh"), Seq("bh"),
+      StructType.fromDDL("doc_id BIGINT, band INT, bh BIGINT, sigb BINARY"), numBuckets)
 
   /** Build (or, with `append = true`, extend) the MinHash band store: one
     * row per (doc_id, band, band_hash) with the full signature riding
-    * along, bucket-partitioned by hash(band, bh). This is [[dedupMinhash]]
+    * along, a [[graft.sinks.BucketStore]] on (band, bh). This is [[dedupMinhash]]
     * made INCREMENTAL — the near-dup analog of [[buildFingerprintStore]]:
     * a new batch probes the store by band hash and only reads the buckets
     * its own bands land in, never re-shingling the corpus. The rows are
     * [[minhashBandRows]]'s; a caller that already signed its docs for a
-    * probe appends those rows through [[writeMinhashBands]] instead.
+    * probe appends those rows through [[minhashStore]] instead.
     *
     * The signature is denormalized onto all 16 band rows (space-for-
     * locality): pair verification needs both signatures, and carrying
@@ -1785,7 +1745,7 @@ object Dedup {
                         table: String = "minhash_bands",
                         numBuckets: Int = 32,
                         append: Boolean = false): Unit =
-    writeMinhashBands(minhashBandRows(docs, numBuckets), sink, table, append)
+    minhashStore(table, numBuckets).write(sink, minhashBandRows(docs), append)
 
   /** Near-dup pairs of a NEW batch: against the stored corpus (via the
     * band store, store-bucket-pruned) and within the batch itself —
@@ -1799,15 +1759,15 @@ object Dedup {
                               table: String = "minhash_bands",
                               minEstSim: Double = 0.5,
                               numBuckets: Int = 32): DataFrame = {
-    val bands = minhashBandRows(newDocs, numBuckets).persist()
-    val result = probeMinhashBands(bands, spark, sink, table, minEstSim)
+    val bands = minhashBandRows(newDocs).persist()
+    val result = probeMinhashBands(bands, spark, sink, table, minEstSim, numBuckets)
     bands.unpersist()
     result
   }
 
   /** The probe behind [[dedupIncrementalMinhash]], over a batch's
     * [[minhashBandRows]] (`bands`; the caller persists it — the
-    * touched-bucket probe, the store cross-join and both within-batch
+    * touched-bucket pass, the store cross-join and both within-batch
     * self-join sides read it).
     *
     * Two arms. Corpus×new collisions carry both packed signatures;
@@ -1826,19 +1786,14 @@ object Dedup {
   private[graft] def probeMinhashBands(bands: DataFrame, spark: SparkSession,
                                        sink: graft.sinks.WarehouseSink,
                                        table: String,
-                                       minEstSim: Double): DataFrame = {
+                                       minEstSim: Double,
+                                       numBuckets: Int): DataFrame = {
     // the cross arm is planned in the store's session, the within-batch
     // arm in the batch's (a stream's clone of `spark`)
     Seq(spark, bands.sparkSession).distinct
       .foreach(graft.functions.VectorFunctions.register)
-    val touched = bands.select("part_bucket").distinct().collect().map(_.getInt(0))
-    // an absent store (first ingest of a fresh corpus) reads as empty
-    val store =
-      if (!sink.tableExists(table))
-        spark.range(0).select(col("id").as("doc_id"), lit(0).as("band"),
-          lit(0L).as("bh"), lit(Array.emptyByteArray).as("sigb"))
-      else sink.read(spark, table)
-        .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
+    val layout = minhashStore(table, numBuckets)
+    val store = layout.read(spark, sink, layout.touched(bands).buckets)
     val estBin = graft.functions.VectorFunctions
       .sigMatchCountBin(col("c.sigb"), col("n.sigb")).cast("double") / NumHashes
     val cross = store.as("c")

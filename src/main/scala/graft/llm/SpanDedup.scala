@@ -3,8 +3,10 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.sinks.BucketStore
 
 /** Span-level exact dedup (the "paragraph/line dedup" of C4-style
   * pipelines, generalized): split every document into fixed-size token
@@ -97,8 +99,9 @@ object SpanDedup {
   // Fifth member of the store family (exact / minhash / simhash / embed /
   // spans). The store holds only the DISTINCT chunk-hash pairs the corpus
   // has ever contained — 16 bytes per unique span, no text, no keeper ids
-  // (span dedup needs existence, not attribution) — bucket-partitioned by
-  // hash so a batch probe reads only its touched buckets.
+  // (span dedup needs existence, not attribution) — a
+  // [[graft.sinks.BucketStore]] on the pair, so a batch probe reads only
+  // its touched buckets.
 
   /** Chunk rows of a doc frame: (doc_id, chunk_ord, chunk). */
   private[llm] def chunkRows(docs: DataFrame, chunkTokens: Int,
@@ -154,16 +157,14 @@ object SpanDedup {
   def buildSpanStore(docs: DataFrame, sink: graft.sinks.WarehouseSink,
                      table: String = "spans", chunkTokens: Int = 10,
                      numBuckets: Int = 32,
-                     append: Boolean = false): Unit = {
-    val idx = hashed(chunkRows(docs, chunkTokens))
-      .select("h1", "h2").distinct()
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("h1", "h2"), numBuckets))
-    sink.write(idx, table, "part_bucket", Seq("h1", "h2"),
-      writeDisposition =
-        if (append) graft.sinks.WriteDisposition.WriteAppend
-        else graft.sinks.WriteDisposition.WriteTruncate)
-  }
+                     append: Boolean = false): Unit =
+    spanStore(table, numBuckets).write(sink,
+      hashed(chunkRows(docs, chunkTokens)).select("h1", "h2").distinct(), append)
+
+  /** The span store: one row per distinct chunk key. */
+  private[graft] def spanStore(table: String, numBuckets: Int): BucketStore =
+    BucketStore(table, Seq("h1", "h2"), Seq("h1", "h2"),
+      StructType.fromDDL("h1 BIGINT, h2 BIGINT"), numBuckets)
 
   /** Span-dedup a NEW batch against the store WITHOUT re-reading corpus
     * text: a batch chunk survives iff its span was never in the corpus
@@ -179,18 +180,10 @@ object SpanDedup {
                              sink: graft.sinks.WarehouseSink,
                              table: String = "spans", chunkTokens: Int = 10,
                              numBuckets: Int = 32): DataFrame = {
-    val b = hashed(chunkRows(newDocs, chunkTokens))
-      .withColumn("part_bucket",
-        graft.sinks.WarehouseSink.bucketPartition(Seq("h1", "h2"), numBuckets))
-      .persist()
-    val touched = b.select("part_bucket").distinct().collect().map(_.getInt(0))
-    val store =
-      if (!sink.tableExists(table)) {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("h1", "h2")
-      } else sink.read(spark, table)
-        .filter(col("part_bucket").isin(touched.toIndexedSeq.map(t => lit(t)): _*))
-        .select(col("h1"), col("h2"))
+    val layout = spanStore(table, numBuckets)
+    val b = hashed(chunkRows(newDocs, chunkTokens)).persist()
+    val store = layout.read(spark, sink, layout.touched(b).buckets)
+      .select(col("h1"), col("h2"))
     val result = graft.Exec.materialize(
       reassemble(keepFirst(b).join(store, Seq("h1", "h2"), "left_anti")))
     b.unpersist()

@@ -32,6 +32,8 @@ object WriteDisposition extends Enumeration {
   *    unread partition — the property time partitions cannot give a keyed
   *    table (the reference leans on BigQuery's global server-side MERGE
   *    for this; a Spark-first design puts the key in the layout instead).
+  *    The CDC MERGE and every incremental dedup/ANN store share it; the
+  *    stores' writes, bucket pass and pruned reads live in [[BucketStore]].
   *
   * Both cluster (sort) rows within files on the cluster columns — the
   * reference's Clustering on PK fields + `__source_ts_ms`
@@ -113,12 +115,12 @@ class WarehouseSink(val warehousePath: String) {
     w.parquet(tablePath(table))
   }
 
-  /** Read a table; filters on the partition column prune directories at
-    * planning time (PartitionFilters in explain). `mergeSchema` surfaces
-    * the union schema of an evolved table (older files simply lack the
-    * newer columns → NULL). Footer-merging costs one metadata read per
-    * file; evolved tables at 100 TB should keep partition counts sane or
-    * pin the latest schema explicitly via `.schema(...)`. */
+  /** Read a table whose schema can evolve (the CDC snapshot, the corpus);
+    * filters on the partition column prune directories at planning time
+    * (PartitionFilters in explain). `mergeSchema` surfaces the union
+    * schema (older files lack the newer columns → NULL) at the cost of a
+    * footer-merging Spark job per read. Stores with a fixed row type pin
+    * it instead and run no such job ([[BucketStore.read]]). */
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(tablePath(table))
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.cdc.MergePipeline
-import graft.sinks.WarehouseSink
+import graft.sinks.{BucketStore, WarehouseSink}
 import graft.state.OffsetStore
 
 /** The continuous consume → convert → upsert loop of the reference
@@ -141,7 +141,7 @@ object CdcStream {
     * reference logs, queryable instead of greppable.
     *
     * Each micro-batch is cached once and read by ONE shuffle-free job
-    * ([[MergePipeline.summarize]]) that yields its accepted and rejected
+    * ([[BucketStore.summarize]]) that yields its accepted and rejected
     * counts and the buckets its accepted rows touch; metrics, the
     * throttle and the MERGE's bucket pruning all read that summary, so
     * none of them costs a pass of its own. */
@@ -166,7 +166,7 @@ object CdcStream {
         // dead-letter write and the MERGE both read
         val cached = batch0.persist()
         try {
-          val summary = MergePipeline.summarize(cached, keyCols, numBuckets,
+          val summary = BucketStore.summarize(cached, keyCols, numBuckets,
             rejectedCol = if (split) Some("__rejected") else None)
           deadLetterTable.foreach { dl =>
             val bad = cached.filter(col("__rejected"))

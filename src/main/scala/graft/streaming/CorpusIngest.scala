@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.cdc.MergePipeline
 import graft.llm.Dedup
-import graft.sinks.WarehouseSink
+import graft.sinks.{BucketStore, WarehouseSink}
 import graft.state.OffsetStore
 
 /** Continuous corpus ingestion with incremental dedup — the reference's
@@ -29,10 +29,11 @@ import graft.state.OffsetStore
   * MinHash → band rows, persisted): those rows probe the band store and,
   * cut to the final survivors by a `left_semi` on doc_id, are the
   * band-store append. The stream loop reads each micro-batch from its
-  * file(s) once — its metrics count fills the cache the probes read.
-  * At a few hundred docs per batch the cost is per-job fixed cost, not
-  * data: one near-dup batch over existing stores runs ~42 Spark jobs
-  * (most of them AQE query stages; CorpusIngestSpec pins the budget).
+  * file(s) once — the exact probe's bucket pass fills the cache and
+  * counts the batch. At a few hundred docs per batch the cost is per-job
+  * fixed cost, not data: one near-dup batch over existing stores runs
+  * ~36 Spark jobs (most of them AQE query stages; CorpusIngestSpec pins
+  * the budget).
   * State across restarts is carried by the checkpoint + the store
   * layout, not executor memory (the [[CdcStream]] restart discipline). */
 object CorpusIngest {
@@ -98,7 +99,16 @@ object CorpusIngest {
                   embedTau: Option[Double] = None,
                   embedTable: String = "embed_lsh",
                   embedCol: String = "embedding",
-                  useBloom: Boolean = false): Long = {
+                  useBloom: Boolean = false): Long =
+    ingest(spark, sink, batch, corpusTable, fpTable, numBuckets,
+      nearDupMinEstSim, mhTable, embedTau, embedTable, embedCol, useBloom)._2
+
+  /** [[ingestBatch]] returning (rows in, rows accepted): the exact
+    * probe's bucket pass counts the batch without a job of its own. */
+  private[streaming] def ingest(spark: SparkSession, sink: WarehouseSink, batch: DataFrame,
+      corpusTable: String, fpTable: String, numBuckets: Int,
+      nearDupMinEstSim: Option[Double], mhTable: String, embedTau: Option[Double],
+      embedTable: String, embedCol: String, useBloom: Boolean): (Long, Long) = {
     // a caller that already persisted the batch (the stream loop below)
     // keeps ownership of its cache
     val owned = batch.storageLevel == StorageLevel.NONE
@@ -108,10 +118,8 @@ object CorpusIngest {
     // sidecar — e.g. a crash landed between the store append and the
     // sidecar rebuild below — fails its freshness check and the probe
     // falls back to the unpruned path, so replay stays convergent
-    val probe =
-      if (useBloom)
-        Dedup.dedupIncrementalBloom(cached, spark, sink, fpTable, numBuckets)
-      else Dedup.dedupIncremental(cached, spark, sink, fpTable, numBuckets)
+    val (probe, nIn) = Dedup.probeFingerprints(cached, spark, sink, fpTable,
+      numBuckets, useBloom)
     val accepted = probe
       .filter(col("dup_of") === -1L)
       .select("doc_id")
@@ -119,13 +127,13 @@ object CorpusIngest {
     // the exact survivors are signed ONCE: the band rows feed the probe
     // and, cut to the final survivors, the band-store append
     val bands = nearDupMinEstSim.map(_ =>
-      Dedup.minhashBandRows(exactSurvivors, numBuckets).persist())
+      Dedup.minhashBandRows(exactSurvivors).persist())
     // dedupIncremental's result is materialized (Exec.materialize), so
     // the store appends below cannot observe this batch's own writes;
     // the minhash probe's pair frame is materialized the same way
     val nearPairSources = Seq(
       nearDupMinEstSim.map { tau =>
-        Dedup.probeMinhashBands(bands.get, spark, sink, mhTable, tau)
+        Dedup.probeMinhashBands(bands.get, spark, sink, mhTable, tau, numBuckets)
           .select(col("doc_a"), col("doc_b"))
       },
       embedTau.map { tau =>
@@ -168,16 +176,16 @@ object CorpusIngest {
     }
     // one pass fills the survivors' cache that every write below reads,
     // counting them and finding the corpus buckets they touch
-    val summary = MergePipeline.summarize(survivors, Seq("doc_id"), numBuckets)
+    val summary = BucketStore.summarize(survivors, Seq("doc_id"), numBuckets)
     val n = summary.rows
     dirPairs.foreach(_.unpersist())
     if (n > 0) {
       upsertDocs(spark, sink, corpusTable, survivors, summary.buckets,
         numBuckets)
       bands.foreach { b =>
-        Dedup.writeMinhashBands(
+        Dedup.minhashStore(mhTable, numBuckets).write(sink,
           b.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),
-          sink, mhTable, append = true)
+          append = true)
       }
       embedTau.foreach { _ =>
         graft.llm.Ann.buildEmbedStore(
@@ -195,7 +203,7 @@ object CorpusIngest {
     bands.foreach(_.unpersist())
     exactSurvivors.unpersist()
     if (owned) cached.unpersist()
-    n
+    (nIn, n)
   }
 
   /** Start the continuous loop over a directory of document parquet files
@@ -220,15 +228,13 @@ object CorpusIngest {
     src.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch is read from its file(s) once: the metrics count
-        // fills the cache the ingest's probes then read
+        // the batch is read from its file(s) once: the exact probe's
+        // bucket pass fills the cache and counts the rows
         val t0 = System.nanoTime()
         val cached = batch.persist()
         val (nIn, nAccepted) =
-          try (if (metricsTable.isDefined) cached.count() else 0L,
-            ingestBatch(spark, sink, cached, corpusTable, fpTable,
-              nearDupMinEstSim = nearDupMinEstSim,
-              embedTau = embedTau, embedCol = embedCol))
+          try ingest(spark, sink, cached, corpusTable, fpTable, 32, nearDupMinEstSim,
+            "minhash_bands", embedTau, "embed_lsh", embedCol, useBloom = false)
           finally cached.unpersist()
         offsets.put(Map(s"ingest/$corpusTable" -> batchId.toString))
         metricsTable.foreach { mt =>

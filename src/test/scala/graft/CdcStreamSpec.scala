@@ -153,8 +153,6 @@ class CdcStreamSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("job budget of one dead-letter micro-batch over an existing table") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
     val inputDir = tmpDir("budget_in_")
     val base = tmpDir("budget_state_")
     val sink = new WarehouseSink(s"$base/warehouse")
@@ -189,30 +187,9 @@ class CdcStreamSpec extends AnyFunSuite with SparkFixture {
       """{"user_id":7,"event_id":31,"__op":"d","__source_ts_ms":2000}""",
       """{"user_id":99,"event_id":32,"__op":"c","__source_ts_ms":2000}""",
       """not json"""): _*)
-    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val marker = "cdc-stream-job-budget-end"
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => groups.put(e.jobId, g))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (groups.get(e.jobId) == marker) done.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val q = try {
-      val q = drain()
-      // events arrive in order: once the marker job's end is seen, every
-      // job of the micro-batch has been recorded
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      q
-    } finally sc.removeSparkListener(listener)
+    val (q, groups) = jobsByGroup(drain())
     // a stream runs its jobs in a job group named by its run id
-    import scala.jdk.CollectionConverters._
-    val jobs = groups.values.asScala.count(_ == q.runId.toString)
+    val jobs = groups.getOrElse(q.runId.toString, 0)
     info(s"jobs per dead-letter micro-batch: $jobs")
     assert(jobs > 0 && jobs <= 7, s"$jobs jobs")
     assert(sink.read(spark, "budget_snapshot").count() === 20) // 20 - 1 deleted + 1 new

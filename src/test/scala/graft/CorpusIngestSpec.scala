@@ -61,7 +61,8 @@ class CorpusIngestSpec extends AnyFunSuite with SparkFixture {
         WarehouseSink.bucketPartition(Seq("h"), 32))
     // fallback returns the touched bucket even though the sidecar has
     // never seen "omega psi"
-    assert(graft.llm.Dedup.bloomCandidates(nb, spark, sink, "fingerprints")
+    val touched = nb.select("part_bucket").collect().map(_.getInt(0)).toSet
+    assert(graft.llm.Dedup.bloomCandidates(nb, touched, spark, sink, "fingerprints", 32)
       .nonEmpty)
     assert(CorpusIngest.ingestBatch(spark, sink,
       docs((60L, "omega psi", "web")), useBloom = true) === 0L)
@@ -360,51 +361,26 @@ class CorpusIngestSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("job budget of one near-dup ingestBatch over existing stores") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
     val sink = new WarehouseSink(tmpDir("ingest_jobs_"))
     val all = genDocs(1 to 60)
     CorpusIngest.ingestBatch(spark, sink, docs(all.take(30): _*),
       nearDupMinEstSim = Some(0.5))
     val batch = docs(all.drop(30): _*)
-    val group = "corpus-ingest-job-budget"
-    val marker = "corpus-ingest-job-budget-end"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-        if (g.contains(group)) jobs.incrementAndGet()
-        if (g.contains(marker)) markerJobs.add(e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerJobs.contains(e.jobId)) done.countDown()
+    val jobs = jobsInGroup("corpus-ingest-job-budget") {
+      CorpusIngest.ingestBatch(spark, sink, batch, nearDupMinEstSim = Some(0.5))
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try CorpusIngest.ingestBatch(spark, sink, batch,
-        nearDupMinEstSim = Some(0.5))
-      finally sc.clearJobGroup()
-      // events arrive in order: once the marker job's end is seen, every
-      // job of the ingest has been counted
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    info(s"jobs per near-dup ingestBatch: ${jobs.get()}")
-    assert(jobs.get() > 0 && jobs.get() <= CorpusIngestSpec.NearDupJobBudget)
+    info(s"jobs per near-dup ingestBatch: $jobs")
+    assert(jobs > 0 && jobs <= CorpusIngestSpec.NearDupJobBudget)
   }
 }
 
 object CorpusIngestSpec {
-  /** Spark jobs of one near-dup `ingestBatch` over existing stores: 42
-    * measured (most of them AQE query stages) since the corpus upsert
-    * runs through the one-shuffle bucket MERGE with its buckets found by
-    * the survivors' count pass; 46 before that, and 48-49 for the
-    * two-pass form (signing the survivors again for the band append, a
-    * second survivors count). */
-  val NearDupJobBudget = 45
+  /** Spark jobs of one near-dup `ingestBatch` over existing stores: 36
+    * measured (most of them AQE query stages) since each store probe
+    * finds its buckets in one job and reads its store with the pinned
+    * schema (no footer-merge job); 42 before that, with the corpus upsert
+    * through the one-shuffle bucket MERGE; 46 before that, and 48-49 for
+    * the two-pass form (signing the survivors again for the band append,
+    * a second survivors count). */
+  val NearDupJobBudget = 39
 }

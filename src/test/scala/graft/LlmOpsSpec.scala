@@ -1282,7 +1282,9 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
     val nb = novel.select(col("doc_id"), md5(col("text")).as("h"))
       .withColumn("part_bucket",
         graft.sinks.WarehouseSink.bucketPartition(Seq("h"), 32))
-    assert(graft.llm.Dedup.bloomCandidates(nb, spark, sink, "fingerprints")
+    val touched = nb.select("part_bucket").as[Int].collect().toSet
+    assert(touched.nonEmpty)
+    assert(graft.llm.Dedup.bloomCandidates(nb, touched, spark, sink, "fingerprints", 32)
       .isEmpty)
     // and the novel batch still dedups correctly (all kept)
     val out = graft.llm.Dedup.dedupIncrementalBloom(novel, spark, sink)
